@@ -128,12 +128,8 @@ def get_spark(
         # serializes on one core (measured 2-5x on the regex/fold-heavy
         # declared queries, OPTIMIZATION_r11.md). 64 KB keeps such stages
         # parallel; at cluster scale real partitions sit far above either
-        # floor, so the knob is inert there — override via env for
-        # deployments that want the stock byte floor back.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_COALESCE_MIN", "64kb"),
-        )
+        # floor, so the setting is inert there.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Whole-stage-codegen class cache (static conf). The stock 100
         # entries thrash on any workload cycling more than ~100 distinct
@@ -142,10 +138,7 @@ def get_spark(
         # interleaved query sweep). Entries are weak-ref keyed compiled
         # classes; the cap only bounds them, actual memory is set by the
         # number of distinct codegen units the workload really has.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # driver testdata ships TIMESTAMP(NANOS) parquet which the Spark
         # vectorized reader rejects; read as long + convert (sources.testdata)

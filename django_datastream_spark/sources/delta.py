@@ -772,49 +772,128 @@ def read_delta(
     Delta writers stamp per file) or ``partitionValues`` prove no row
     matches are never handed to Spark, and the bounds re-apply as row
     filters so the result equals filtering a full read. ``None`` on
-    either side leaves that bound open. Conservative by construction:
-    a file without stats (or with non-comparable stat types) is kept.
-    At 100 TB this is the difference between scanning a day and
-    scanning the table — the same contract as the engine's own
-    ``txn_read(where=...)``. Past :data:`DISTRIBUTED_PRUNE_AT` live
-    files the stats test runs as a Spark job and only survivors
-    return to the driver (the ``txnlog`` threshold design).
+    either side leaves that bound open; a scalar means equality and a
+    list IN. Conservative by construction: a file without stats (or
+    with non-comparable stat types) is kept. At 100 TB this is the
+    difference between scanning a day and scanning the table — the
+    same contract, and the same keep test, as the engine's own
+    ``txn_read(where=...)``, including its distributed prune past
+    ``txnlog.DISTRIBUTED_PRUNE_AT`` live files.
     ``timestamp_ms`` pins AS OF TIMESTAMP (mutually exclusive with
     ``version``; resolution per :func:`delta_version_at`)."""
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
         version = delta_version_at(root, timestamp_ms)
+    from .. import txnlog as TL
+
     _v, md, adds = delta_snapshot_arrow(root, version)
+    if not where:
+        return _scan_snapshot_arrow(spark, root, md, adds)
+    where = TL._norm_where(where)
+    adds = _prune_adds(spark, md, adds, where)
+    return TL._residual(_scan_snapshot_arrow(spark, root, md, adds), where)
+
+
+def _prune_adds(spark, md: dict, adds, where_norm: dict):
+    """The add actions the shared keep test (:func:`..txnlog._keep_file`)
+    cannot rule out. Under column mapping the log's partitionValues
+    and stats keys are PHYSICAL, so the predicate translates to
+    physical names (the residual row filter stays logical: it runs
+    after the rename)."""
+    import functools
+
+    from .. import txnlog as TL
+
     mapping = _column_mapping(md)
-    part_cols = set(md.get("partitionColumns") or [])
-    if where:
-        # under name mapping the log's partitionValues and stats keys
-        # are PHYSICAL — translate the prune predicate (residual row
-        # filters below stay logical: they run after the rename)
-        pwhere = (
-            {mapping["phys"].get(c, c): b for c, b in where.items()}
-            if mapping
-            else where
-        )
-        ppart = (
-            {mapping["phys"].get(c, c) for c in part_cols}
-            if mapping
-            else part_cols
-        )
-        if adds.num_rows >= DISTRIBUTED_PRUNE_AT:
-            adds = _prune_adds_distributed(spark, adds, pwhere, ppart)
+    phys = mapping["phys"] if mapping else {}
+    types = {
+        phys.get(f["name"], f["name"]): f["type"]
+        for f in json.loads(md["schemaString"])["fields"]
+        if isinstance(f["type"], str)
+    }
+    part = {phys.get(c, c) for c in md.get("partitionColumns") or []}
+    meta = functools.partial(_delta_file_meta, types, part)
+    pwhere = {phys.get(c, c): b for c, b in where_norm.items()}
+    return TL._prune(
+        spark, adds, ["partitionValues", "stats"], meta, pwhere
+    )
+
+
+def _delta_value(raw, typ: str):
+    """One ``add.stats`` min/max or partition value as the Python
+    value of its column type (None: not prunable). Temporal values
+    parse as instants — either ISO separator, naive = UTC."""
+    import datetime
+
+    if raw is None:
+        return None
+    try:
+        if typ == "string":
+            return raw if isinstance(raw, str) else None
+        if typ == "boolean":
+            return {"true": True, "false": False}.get(str(raw).lower())
+        if typ == "date":
+            return datetime.date.fromisoformat(str(raw)[:10])
+        if typ in ("timestamp", "timestamp_ntz"):
+            return datetime.datetime.fromisoformat(str(raw))
+        if typ in ("byte", "short", "integer", "long"):
+            return int(raw)
+        if typ in ("float", "double") or typ.startswith("decimal"):
+            return float(raw)
+    except (TypeError, ValueError):
+        return None
+    return None
+
+
+def _delta_file_meta(types: dict, part_cols: set, pv, stats):
+    """One add action → the shared keep test's ``(stats, parts,
+    bloom)``: ``add.stats`` minValues/maxValues typed by the table
+    schema (``types``: physical column → Delta type), and each
+    partition value as an exact one-value stat."""
+    import datetime
+    import re
+
+    from .. import txnlog as TL
+
+    try:
+        j = json.loads(stats) if isinstance(stats, str) and stats else {}
+    except ValueError:
+        j = {}
+    mins, maxs, nulls = (
+        j.get(k) or {} for k in ("minValues", "maxValues", "nullCount")
+    )
+    pv = dict(pv or ())
+    cols = {}
+    for c, typ in types.items():
+        if c in part_cols:
+            if c not in pv:
+                continue
+            lo = hi = pv[c]
+            if lo is None:  # null partition: every row NULL
+                cols[c] = {"t": "null"}
+                continue
         else:
-            adds = _prune_adds_local(adds, pwhere, ppart)
-    df = _scan_snapshot_arrow(spark, root, md, adds)
-    if where:
-        for col, bound in where.items():
-            lo, hi = bound
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-    return df
+            lo, hi = mins.get(c), maxs.get(c)
+        mn = TL._stat_value(_delta_value(lo, typ))
+        hi_v = _delta_value(hi, typ)
+        if (
+            c not in part_cols and hi_v is not None
+            and typ.startswith("timestamp")
+            and not re.search(r"\.\d{6}", str(hi))
+        ):
+            # delta-spark truncates timestamp stats to milliseconds:
+            # the true max may sit up to 999 µs above the recorded one
+            hi_v += datetime.timedelta(microseconds=999)
+        mx = TL._stat_value(hi_v)
+        if mn is not None and mx is not None and mn[0] == mx[0]:
+            cols[c] = {"t": mn[0], "min": mn[1], "max": mx[1]}
+        elif (
+            lo is None and hi is None and c in nulls
+            and nulls[c] == j.get("numRecords")
+        ):
+            cols[c] = {"t": "null"}
+    return cols, None, None
 
 
 def _prune_adds_local(adds, where: dict, part_cols: set):
@@ -2727,43 +2806,21 @@ def optimize_delta(
     io = io_for(root)
     _v, md, adds = delta_snapshot(root)
     part_cols = list(md.get("partitionColumns") or [])
-    sizes = {}
-    for a in adds:
-        try:
-            sizes[a["path"]] = io.size(
-                os.path.join(root, urllib.parse.unquote(a["path"]))
-            )
-        except OSError:
-            sizes[a["path"]] = target_file_bytes
-    if zorder_by:
-        cand = list(adds)
-    else:
-        cand = [
-            a
-            for a in adds
-            if sizes[a["path"]] < target_file_bytes
-            or a.get("deletionVector")
-        ]
-    if len(cand) < 2 and not any(a.get("deletionVector") for a in cand):
+    by_path = {a["path"]: a for a in adds}
+    plan = TL._plan_compaction(
+        list(by_path),
+        lambda p: io.size(os.path.join(root, urllib.parse.unquote(p))),
+        target_file_bytes, zorder_by,
+        has_dv=lambda p: bool(by_path[p].get("deletionVector")),
+    )
+    if plan is None:
         return {"rewritten_files": 0, "new_files": 0, "skipped": True}
-    df = _scan_adds(spark, root, md, cand)
-    total = sum(sizes[a["path"]] for a in cand)
-    n_out = max(1, -(-total // target_file_bytes))  # ceil
-    keys: list = list(part_cols)
-    if zorder_by:
-        from ..layout import zorder_key
-
-        joined, z = zorder_key(df, zorder_by)
-        df = joined.withColumn("_z", z).select(*df.columns, "_z")
-        keys.append("_z")
-    if keys:
-        out = df.repartitionByRange(n_out, *keys).sortWithinPartitions(
-            *keys
-        )
-        if zorder_by:
-            out = out.drop("_z")
-    else:
-        out = df.coalesce(min(n_out, len(cand)))
+    paths, total = plan
+    cand = [by_path[p] for p in paths]
+    out = TL._compaction_layout(
+        _scan_adds(spark, root, md, cand), part_cols, zorder_by, total,
+        target_file_bytes, len(cand),
+    )
 
     import uuid as _uuid
 

@@ -295,6 +295,8 @@ def _decode_manifest_entries(
     inherited by entries whose own is null, the spec's inheritance
     rule. Equality deletes fail closed. Pure function of the manifest
     file — the unit of distribution for big snapshots."""
+    from .. import txnlog as TL
+
     _s, entries = AV.read_container_file(man_path, io=io)
     fields = (
         {
@@ -324,7 +326,9 @@ def _decode_manifest_entries(
                 raise IcebergUnsupportedError(
                     f"content={c} entry inside a DATA manifest"
                 )
-            if where and not _entry_may_match(df, where, fields):
+            if where and not TL._keep_file(
+                _iceberg_file_stats(df, fields), None, where_norm=where
+            ):
                 continue
             data.append((df["file_path"], seq))
         elif c == 1:
@@ -358,10 +362,13 @@ def _snapshot_files(
     always apply). Distribution as before: past
     :data:`DISTRIBUTED_MANIFESTS_AT` manifests (and given ``spark``)
     the per-manifest Avro decode runs as one task each."""
+    from .. import txnlog as TL
+
     md = iceberg_metadata(root)
     snaps = md.get("snapshots", [])
     if not snaps:
         return md, {}, []
+    where = TL._norm_where(where) if where else None
     sid = (
         md.get("current-snapshot-id")
         if snapshot_id is None
@@ -459,9 +466,6 @@ def _decode_manifests_distributed(
     import pandas as _pd
 
     md_json = json.dumps(md)
-    wser = (
-        {c: (b[0], b[1]) for c, b in where.items()} if where else None
-    )
     # resolve DRIVER-side and capture: the scheme registry does not
     # exist in executor workers (the FileIO object itself is picklable)
     io = io_for(root)
@@ -478,7 +482,7 @@ def _decode_manifests_distributed(
                 pdf["m"], pdf["c"], pdf["q"]
             ):
                 d, x = IB._decode_manifest_entries(
-                    root, m, mp, wser, int(content), int(seq), io=io
+                    root, m, mp, where, int(content), int(seq), io=io
                 )
                 for p, q in d:
                     ks.append("d")
@@ -533,6 +537,32 @@ def _entry_may_match(df: dict, where: dict, fields: dict) -> bool:
         if hi is not None and f_lo is not None and f_lo > hi:
             return False  # whole file above the range
     return True
+
+
+def _iceberg_file_stats(df: dict, fields: dict) -> dict:
+    """A manifest ``data_file``'s lower/upper bounds, decoded by field
+    id (``fields``: name → (field id, type), hoisted per manifest),
+    as the shared keep test's tagged column stats."""
+    from .. import txnlog as TL
+
+    lo_map, hi_map = (
+        {e["key"]: e["value"] for e in raw} if isinstance(raw, list)
+        else raw or {}
+        for raw in (df.get("lower_bounds"), df.get("upper_bounds"))
+    )
+    cols = {}
+    for name, (fid, typ) in fields.items():
+        mn, mx = (
+            TL._stat_value(_bound_value(m[fid], typ)) if fid in m else None
+            for m in (lo_map, hi_map)
+        )
+        if (mn or mx) and (mn or mx)[0] == (mx or mn)[0]:
+            cols[name] = {
+                "t": (mn or mx)[0],
+                "min": mn[1] if mn else None,
+                "max": mx[1] if mx else None,
+            }
+    return cols
 
 
 def read_iceberg(
@@ -695,11 +725,9 @@ def read_iceberg(
                 base = base.join(ed, cond, "left_anti")
         df = base.select(*[F.col(f.name) for f in schema.fields])
     if where:
-        for col, (lo, hi) in where.items():
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
+        from .. import txnlog as TL
+
+        df = TL._residual(df, TL._norm_where(where))
     return df.select(
         *[F.col(f.name) for f in schema.fields]
     )
@@ -775,17 +803,25 @@ _MANIFEST_SCHEMA = {
 
 def _encode_bound(v, iceberg_type: str) -> bytes | None:
     """Spec Appendix D single-value binary serialization (the subset
-    this reader prunes on)."""
+    this reader prunes on) of a column's Python value."""
+    import datetime
+
     if v is None:
         return None
-    if iceberg_type in ("int",):
+    if iceberg_type == "date" and isinstance(v, datetime.date):
+        v = (v - datetime.date(1970, 1, 1)).days
+    if iceberg_type in ("timestamp", "timestamptz"):
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        return struct.pack("<q", (
+            v - datetime.datetime(1970, 1, 1)
+        ) // datetime.timedelta(microseconds=1))
+    if iceberg_type in ("int", "date"):
         return struct.pack("<i", int(v))
-    if iceberg_type in ("long", "date"):
-        return (
-            struct.pack("<q", int(v))
-            if iceberg_type == "long"
-            else struct.pack("<i", int(v))
-        )
+    if iceberg_type == "long":
+        return struct.pack("<q", int(v))
+    if iceberg_type == "boolean":
+        return b"\x01" if v else b"\x00"
     if iceberg_type == "float":
         return struct.pack("<f", float(v))
     if iceberg_type == "double":
@@ -812,56 +848,64 @@ def _decode_bound(raw: bytes, iceberg_type: str):
     return None  # unmapped type: never prune on it
 
 
-def _footer_bounds(full: str, fields: list[dict], io=None) -> tuple:
-    """(lower_bounds, upper_bounds) kv-lists from a parquet footer for
-    the mapped primitive columns — what a real Iceberg writer stamps.
-    ``io`` routes the footer read through the storage seam (ranged
-    reads — an object-store data file never buffers whole)."""
-    import pyarrow.parquet as pq
+def _bound_value(raw: bytes, iceberg_type: str):
+    """Spec Appendix D single-value binary → the Python value of the
+    column (None: unmapped type or malformed bytes — never pruned)."""
+    import datetime
 
+    epoch = datetime.datetime(1970, 1, 1)
     try:
-        md = pq.ParquetFile(
-            io.parquet_source(full) if io is not None else full
-        ).metadata
-    except Exception:
-        return None, None
-    by_name = {
-        f["name"]: (f["id"], f["type"])
-        for f in fields
-        if isinstance(f["type"], str)
-    }
-    lo: dict[int, bytes] = {}
-    hi: dict[int, bytes] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if name not in by_name or col.statistics is None:
-                continue
-            st = col.statistics
-            if not st.has_min_max:
-                continue
-            fid, typ = by_name[name]
-            lo_b = _encode_bound(st.min, typ)
-            hi_b = _encode_bound(st.max, typ)
-            if lo_b is None or hi_b is None:
-                continue
-            cur_lo = lo.get(fid)
-            if cur_lo is None or _decode_bound(lo_b, typ) < _decode_bound(
-                cur_lo, typ
-            ):
-                lo[fid] = lo_b
-            cur_hi = hi.get(fid)
-            if cur_hi is None or _decode_bound(hi_b, typ) > _decode_bound(
-                cur_hi, typ
-            ):
-                hi[fid] = hi_b
-    tolist = lambda d: (  # noqa: E731
-        [{"key": k, "value": v} for k, v in sorted(d.items())] or None
-    )
-    return tolist(lo), tolist(hi)
+        if iceberg_type == "boolean":
+            return raw[:1] != b"\x00"
+        if iceberg_type == "date":
+            return (epoch + datetime.timedelta(days=struct.unpack("<i", raw)[0])).date()
+        if iceberg_type in ("timestamp", "timestamptz"):
+            v = epoch + datetime.timedelta(
+                microseconds=struct.unpack("<q", raw)[0]
+            )
+            if iceberg_type == "timestamptz":
+                v = v.replace(tzinfo=datetime.timezone.utc)
+            return v
+    except (struct.error, OverflowError):
+        return None
+    return _decode_bound(raw, iceberg_type)
 
+
+def _stat_python(e: dict, side: str):
+    """One side of a tagged footer stat (``txnlog._stats_of_file``)
+    back as the column's Python value (timestamps naive UTC)."""
+    import datetime
+
+    v = e.get(side)
+    if v is None or e["t"] not in ("ts", "date"):
+        return v
+    if e["t"] == "ts":
+        return datetime.datetime.fromisoformat(v)
+    return datetime.date.fromisoformat(v)
+
+
+def _footer_bounds(full: str, fields: list[dict], io=None) -> tuple:
+    """(lower_bounds, upper_bounds) kv-lists for the mapped primitive
+    columns, encoded from the shared footer reader's stats — what a
+    real Iceberg writer stamps. ``io`` routes the footer read through
+    the storage seam (ranged reads — an object-store data file never
+    buffers whole)."""
+    from .. import txnlog as TL
+
+    st = TL._stats_of_file("", full, io=io)
+    cols = (st or {}).get("cols") or {}
+    lo: list[dict] = []
+    hi: list[dict] = []
+    for f in sorted(fields, key=lambda f: f["id"]):
+        e = cols.get(f["name"])
+        if not isinstance(f["type"], str) or e is None or e["t"] == "null":
+            continue
+        lo_b = _encode_bound(_stat_python(e, "min"), f["type"])
+        hi_b = _encode_bound(_stat_python(e, "max"), f["type"])
+        if lo_b is not None and hi_b is not None:
+            lo.append({"key": f["id"], "value": lo_b})
+            hi.append({"key": f["id"], "value": hi_b})
+    return lo or None, hi or None
 
 
 # ---------------------------------------------------------------------------
@@ -1018,32 +1062,6 @@ def _avro_partition_value(parsed: dict, v):
     return v
 
 
-def _footer_minmax(full: str, col: str, io=None):
-    """(min, max) python values of one column across a parquet
-    footer's row groups (None, None when stats are absent)."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(
-            io.parquet_source(full) if io is not None else full
-        ).metadata
-    except Exception:
-        return None, None
-    mn = mx = None
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            c = g.column(ci)
-            if c.path_in_schema != col or c.statistics is None:
-                continue
-            st = c.statistics
-            if not st.has_min_max:
-                continue
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
-    return mn, mx
-
-
 def _file_partition_tuple(
     root: str, rel: str, spec_fields: list[dict], io=None
 ) -> dict:
@@ -1051,10 +1069,13 @@ def _file_partition_tuple(
     transform(min) must equal transform(max) — otherwise the file
     spans partitions and publishing a tuple would mis-prune on
     external engines, so it raises with remediation."""
-    full = os.path.join(root, rel)
+    from .. import txnlog as TL
+
+    st = TL._stats_of_file(root, rel, io=io)
     out = {}
     for pf in spec_fields:
-        mn, mx = _footer_minmax(full, pf["source"], io=io)
+        e = ((st or {}).get("cols") or {}).get(pf["source"]) or {"t": "null"}
+        mn, mx = _stat_python(e, "min"), _stat_python(e, "max")
         if mn is None or mx is None:
             raise IcebergUnsupportedError(
                 f"{rel}: no footer stats for partition source "
@@ -2460,17 +2481,13 @@ def optimize_iceberg(
             "live merge-on-read delete files — compaction under them "
             "is out of scope (rewrite via read+publish instead)"
         )
-    if not data:
+    plan = _TLo._plan_compaction(
+        sorted(data), lambda p: io.size(_resolve(root, md, p)),
+        target_file_bytes,
+    )
+    if plan is None:
         return {"rewritten_files": 0, "new_files": 0, "skipped": True}
-    sizes = {}
-    for p in data:
-        try:
-            sizes[p] = io.size(_resolve(root, md, p))
-        except OSError:
-            sizes[p] = target_file_bytes
-    cand = sorted(p for p in data if sizes[p] < target_file_bytes)
-    if len(cand) < 2:
-        return {"rewritten_files": 0, "new_files": 0, "skipped": True}
+    cand, total = plan
     # per-file original adder (EXISTING entries keep it) — one pass
     # over the current manifest list
     cur_sid = md["current-snapshot-id"]
@@ -2501,9 +2518,9 @@ def optimize_iceberg(
     df = spark.read.schema(scan_schema).parquet(*files).select(
         *[F.col(f.name) for f in schema.fields]
     )
-    total = sum(sizes[p] for p in cand)
-    n_out = max(1, -(-total // target_file_bytes))  # ceil
-    out = df.coalesce(min(n_out, len(cand)))
+    out = _TLo._compaction_layout(
+        df, [], None, total, target_file_bytes, len(cand)
+    )
     staging = os.path.join(root, f"_staging_{_uuid.uuid4().hex}")
     rels = []
     try:

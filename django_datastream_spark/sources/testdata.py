@@ -33,6 +33,9 @@ TABLES = (
 )
 
 
+#: input bytes per task of :func:`scatter_for_compute`'s exchange
+SCATTER_SPLIT = 64 * 1024
+
 #: path -> (StructType, ns_cols); schema inference runs once per table
 #: per process, later reads are pure plan construction (zero jobs)
 _SCHEMA_CACHE: dict = {}
@@ -76,7 +79,7 @@ def scatter_for_compute(df: DataFrame, input_bytes: int | None = None) -> DataFr
     rest idle. The round-robin exchange here costs one shuffle of the
     (tiny) input and buys parallel compute.
 
-    Width (r12, VERDICT r11 #4): ``ceil(input_bytes / split)`` capped at
+    Width (r12, VERDICT r11 #4): ``ceil(input_bytes / SCATTER_SPLIT)`` capped at
     ``defaultParallelism`` instead of a flat ``defaultParallelism`` —
     the driver's 8-core scaling run showed a band of scattered queries
     running 2-3x FASTER at 8 ways than 32 (per-task scheduling overhead
@@ -84,11 +87,10 @@ def scatter_for_compute(df: DataFrame, input_bytes: int | None = None) -> DataFr
     interleaved width A/B at sf0.1 confirmed 8-16 ways beating 32 on
     the light-per-row scatter users (q32 0.54->0.34, q132 1.40->1.05,
     q50 1.33->1.22) while the dense ones (q59's 64-hash minhash) are
-    flat. ``split`` is ~64 KB/task because these stages are CPU-dense
-    per byte (a 2-8 MB/task split would collapse them to one core);
-    env-overridable via ``SPARK_GRAFT_SCATTER_SPLIT``. The size guard
-    keeps it scale-adaptive: when the input already carries at least
-    ``defaultParallelism`` byte-splits (the 100 TB case), this is a
+    flat. :data:`SCATTER_SPLIT` is 64 KB/task because these stages are
+    CPU-dense per byte (a 2-8 MB/task split would collapse them to one
+    core). The size guard keeps it scale-adaptive: when the input
+    already carries at least ``defaultParallelism`` byte-splits (the 100 TB case), this is a
     no-op — no payload shuffle is ever added at real scale, and the
     width formula only ever applies below that guard.
     """
@@ -98,8 +100,7 @@ def scatter_for_compute(df: DataFrame, input_bytes: int | None = None) -> DataFr
         return df
     width = par
     if input_bytes is not None:
-        split = int(os.environ.get("SPARK_GRAFT_SCATTER_SPLIT", 64 * 1024))
-        width = min(par, max(1, -(-input_bytes // split)))
+        width = min(par, max(1, -(-input_bytes // SCATTER_SPLIT)))
     return df.repartition(width)
 
 

@@ -347,17 +347,16 @@ class Tables:
         aggregate upsert, log compaction); plain appends accrete into
         the current snapshot — so time travel is at rewrite
         granularity, like any snapshot-pointer table format.  Under
-        ``TXN_POINTS``, ``points_raw`` versions are COMMIT versions —
-        every append/optimize/delete is time-travelable until
-        vacuum."""
-        if table == "points_raw" and self.TXN_POINTS:
+        ``TXN_POINTS`` / ``TXN_AGG``, ``points_raw`` / ``points_agg``
+        versions are COMMIT versions — every append/optimize/delete
+        or upsert is time-travelable until vacuum."""
+        troot = self._txn_root_of(table)
+        if troot is not None:
             from . import txnlog as TL
 
-            if not TL.is_txn_table(self.points_raw_path):
+            if not TL.is_txn_table(troot):
                 return []
-            return list(
-                range(1, TL.latest_version(self.points_raw_path) + 1)
-            )
+            return list(range(1, TL.latest_version(troot) + 1))
         tdir = os.path.join(self.root, table)
         if not os.path.isdir(tdir):
             return []
@@ -375,16 +374,13 @@ class Tables:
         (raw stored rows — for the streams table that is the metadata
         log state at that snapshot). Raises ``ValueError`` if the
         version was never cut or was vacuumed by retention."""
-        if table == "points_raw" and self.TXN_POINTS:
+        troot = self._txn_root_of(table)
+        if troot is not None:
             from . import txnlog as TL
 
             if version not in self.snapshot_versions(table):
-                raise ValueError(
-                    f"points_raw commit v{version} not in log"
-                )
-            return TL.txn_read(
-                self.spark, self.points_raw_path, version=version
-            )
+                raise ValueError(f"{table} commit v{version} not in log")
+            return TL.txn_read(self.spark, troot, version=version)
         if version not in self.snapshot_versions(table):
             raise ValueError(
                 f"{table} v={version} not retained "
@@ -394,6 +390,14 @@ class Tables:
         return self.spark.read.parquet(
             os.path.join(self.root, table, f"v={version}")
         )
+
+    def _txn_root_of(self, table: str) -> str | None:
+        """The commit-log root of a txn-backed ``table``, else None."""
+        if table == "points_raw" and self.TXN_POINTS:
+            return self.points_raw_path
+        if table == "points_agg" and self.TXN_AGG:
+            return self.points_agg_path
+        return None
 
     # -- paths (current snapshot) --------------------------------------------
     @property

@@ -945,7 +945,9 @@ def _stats_of_file(root: str, rel: str, io=None) -> dict | None:
     unprunable). Module-level so the distributed collector's tasks can
     run it unchanged. ``io`` (a picklable FileIO) serves the footer
     through the storage seam — ranged reads, so an object-store file
-    never buffers whole for its footer."""
+    never buffers whole for its footer. The one footer reader of every
+    log: Delta and Iceberg write paths derive their stats from it."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
@@ -955,8 +957,8 @@ def _stats_of_file(root: str, rel: str, io=None) -> dict | None:
             else os.path.join(root, rel)
         )
         md = pq.ParquetFile(src).metadata
-    except Exception:
-        return None  # unreadable footer: file stays unprunable
+    except (OSError, pa.ArrowException):
+        return None  # missing/corrupt footer: file stays unprunable
     per: dict[str, dict | None] = {}
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
@@ -978,9 +980,10 @@ def _stats_of_file(root: str, rel: str, io=None) -> dict | None:
                 try:
                     # pyarrow raises for physical types it cannot
                     # cast statistics for (e.g. INT96) even when
-                    # has_min_max reports true
+                    # has_min_max reports true, and for values
+                    # Python cannot hold (a year-10000 timestamp)
                     mn, mx = _stat_value(st.min), _stat_value(st.max)
-                except Exception:
+                except (ValueError, OverflowError, pa.ArrowException):
                     mn = mx = None
                 if mn is None or mx is None or mn[0] != mx[0]:
                     new = None
@@ -1100,6 +1103,272 @@ def _merge_col_stats(cur: dict | None, new: dict | None) -> dict | None:
     }
 
 
+def _as_bound(bound, tag: str):
+    """A caller bound in the stored stat domain for ``tag``, or None
+    when incomparable (the file is then kept). A string bound on a
+    temporal column is read the way Spark casts the literal — an ISO
+    date or datetime with a ``'T'`` or ``' '`` separator, naive =
+    UTC — so stats and bound compare as instants, never as text."""
+    import datetime
+
+    if tag == "num":
+        return bound if isinstance(bound, (int, float)) else None
+    if tag == "str":
+        return bound if isinstance(bound, str) else None
+    try:
+        if isinstance(bound, str) and tag == "ts":
+            bound = datetime.datetime.fromisoformat(bound)
+        elif isinstance(bound, str) and tag == "date":
+            bound = datetime.date.fromisoformat(bound)
+    except ValueError:
+        return None
+    if tag == "ts" and isinstance(bound, datetime.datetime) or (
+        tag == "date" and type(bound) is datetime.date
+    ):
+        return _stat_value(bound)[1]
+    return None
+
+
+def _stat_may_match(s: dict | None, lo, hi) -> bool:
+    """Conservative intersection test of one column's tagged stats
+    with ``lo <= col <= hi``: False only when they PROVE no row of
+    the file satisfies it."""
+    if s is None or lo is None and hi is None:
+        return True
+    if s["t"] == "null":
+        return False  # every value NULL; comparisons never match
+    lo_c = None if lo is None else _as_bound(lo, s["t"])
+    if lo_c is not None and s.get("max") is not None and s["max"] < lo_c:
+        return False
+    hi_c = None if hi is None else _as_bound(hi, s["t"])
+    if hi_c is not None and s.get("min") is not None and s["min"] > hi_c:
+        return False
+    return True
+
+
+class _In(tuple):
+    """A normalized IN-list bound: the tuple of its values. A class,
+    not a sentinel, so it survives pickling into prune tasks."""
+
+
+def _norm_where(where: dict) -> dict[str, tuple]:
+    """Normalize a predicate spec: a scalar value means equality —
+    ``{col: v}`` ≡ ``{col: (v, v)}`` — a tuple is an inclusive range
+    ``(lo, hi)``, and a list/set is an IN-list (normalized to
+    :class:`_In`): the multi-key point lookup a CDC apply or key
+    backfill does, pruned per value through stats AND bloom."""
+    out = {}
+    for c, b in where.items():
+        if isinstance(b, (list, set, frozenset)):
+            out[c] = _In(b)
+        elif isinstance(b, tuple):
+            out[c] = b
+        else:
+            out[c] = (b, b)
+    return out
+
+
+def _hive_parts(rel: str) -> dict[str, str]:
+    """``col=value`` directory segments of a relative file path."""
+    out: dict[str, str] = {}
+    for seg in rel.split(os.sep)[:-1]:
+        k, eq, v = seg.partition("=")
+        if eq:
+            out.setdefault(k, v)
+    return out
+
+
+def _part_may_match(got: str | None, value) -> bool:
+    """False only when the hive directory value ``got`` PROVABLY
+    differs from ``value``. Only plain str/int values compare (their
+    hive spelling is exact ``str(v)``); escaped (%xx) or exotic
+    spellings keep the file — the residual filter still applies."""
+    if got is None or isinstance(value, bool):
+        return True
+    if not isinstance(value, (str, int)):
+        return True
+    want = str(value)
+    return "%" in want or "%" in got or got == want
+
+
+def _keep_file(
+    stats: dict | None, parts: dict | None, bloom=None, *, where_norm: dict
+) -> bool:
+    """THE data-skipping test of every log (txn, Delta, Iceberg): each
+    log translates one file's metadata into tagged column ``stats``
+    (``{col: {t, min, max, nulls}}``) plus, for hive paths, partition
+    directory values ``parts``. ``bloom(col, lo, hi)`` is an extra
+    signal (the txn bloom sidecar). IN-lists test per value — a file
+    survives only if SOME value passes every signal. False only on
+    PROOF of no match."""
+    for c, b in where_norm.items():
+        s = (stats or {}).get(c)
+        got = (parts or {}).get(c)
+        if not any(
+            _stat_may_match(s, lo, hi)
+            and (lo is None or lo != hi or _part_may_match(got, lo))
+            and (bloom is None or bloom(c, lo, hi))
+            for lo, hi in ([(v, v) for v in b] if isinstance(b, _In) else [b])
+        ):
+            return False
+    return True
+
+
+def _prune(spark, tbl, cols: list[str], meta_of, where_norm: dict):
+    """The rows of ``tbl`` (one per file) that :func:`_keep_file`
+    cannot rule out. ``meta_of(*values)`` maps one row's ``cols`` to
+    the keep test's ``(stats, parts, bloom)`` — the per-log
+    translation. A driver loop for small tables (or ``spark=None``);
+    past :data:`DISTRIBUTED_PRUNE_AT` rows one ``mapInPandas`` job
+    runs the same test executor-side and only SURVIVOR indices return
+    to the driver, so the metadata column never parses there."""
+    import math
+
+    import pyarrow as pa
+
+    n = tbl.num_rows
+    if spark is None or n < DISTRIBUTED_PRUNE_AT:
+        rows = zip(*(tbl.column(c).to_pylist() for c in cols))
+        keep = [
+            i for i, row in enumerate(rows)
+            if _keep_file(*meta_of(*row), where_norm=where_norm)
+        ]
+        return tbl.take(pa.array(keep, pa.int64()))
+    ship = tbl.select(cols).append_column(
+        "__i", pa.array(range(n), pa.int64())
+    )
+    fdf = spark.createDataFrame(ship).repartition(
+        max(8, min(1024, math.ceil(n / 20_000)))
+    )
+
+    def _task(batches):
+        import pandas as _pd
+
+        from django_datastream_spark import txnlog as TL
+
+        for pdf in batches:
+            keep = [
+                i for i, *row in zip(pdf["__i"], *(pdf[c] for c in cols))
+                if TL._keep_file(*meta_of(*row), where_norm=where_norm)
+            ]
+            yield _pd.DataFrame({"__i": _pd.Series(keep, dtype="int64")})
+
+    keep = sorted(r[0] for r in fdf.mapInPandas(_task, "__i long").collect())
+    return tbl.take(pa.array(keep, pa.int64()))
+
+
+def _residual(df: DataFrame, where_norm: dict) -> DataFrame:
+    """Re-apply a normalized ``where`` as row filters: pruning is I/O
+    only, so every log's read equals filtering a full read."""
+    from pyspark.sql import functions as F
+
+    for col, b in where_norm.items():
+        if isinstance(b, _In):
+            df = df.filter(F.col(col).isin(*b) if b else F.lit(False))
+            continue
+        lo, hi = b
+        if lo is not None:
+            df = df.filter(F.col(col) >= F.lit(lo))
+        if hi is not None:
+            df = df.filter(F.col(col) <= F.lit(hi))
+    return df
+
+
+def _txn_file_meta(root: str, io, cache: dict, rel: str, st_j):
+    """One txn fold row → keep-test inputs: its recorded stats, its
+    hive directories, and its bloom sidecar (``cache``: one sidecar
+    read per file per prune)."""
+    stats = json.loads(st_j) if isinstance(st_j, str) and st_j else None
+    return (
+        (stats or {}).get("cols"),
+        _hive_parts(rel),
+        lambda c, lo, hi: _bloom_may_match(
+            root, rel, c, lo, hi, cache, io=io
+        ),
+    )
+
+
+def _prune_fold(spark, table_root: str, tbl, where_norm: dict):
+    """The fold-table rows :func:`txn_read` must scan. A driver-only
+    FileIO (HadoopFileIO) cannot ship into tasks: driver loop."""
+    import functools
+
+    io = _io(table_root)
+    if not getattr(io, "executor_safe", True):
+        spark = None
+    meta = functools.partial(
+        _txn_file_meta, _root(table_root), None if _is_local(io) else io, {}
+    )
+    return _prune(spark, tbl, ["rel", "stats"], meta, where_norm)
+
+
+def prune_files(
+    table_root: str,
+    where: dict,
+    version: int | None = None,
+) -> tuple[int, list[str], list[str]]:
+    """(version, kept files, pruned files) for a conjunction of range
+    predicates ``{col: (lo, hi)}`` (either bound may be None for a
+    one-sided range; a bare scalar means equality; a list/set means
+    IN — pruned per value through stats and bloom). Kept ⊇ every
+    file that can hold a matching row."""
+    v, tbl = _fold_arrow(table_root, version)
+    kept = set(
+        _prune_fold(None, table_root, tbl, _norm_where(where))
+        .column("rel").to_pylist()
+    )
+    rels = sorted(tbl.column("rel").to_pylist())
+    return v, [f for f in rels if f in kept], [f for f in rels if f not in kept]
+
+
+def _plan_compaction(
+    files: list, size_of, target_file_bytes: int, zorder_by=None,
+    has_dv=lambda f: False,
+):
+    """OPTIMIZE candidates, shared by every log: files under
+    ``target_file_bytes`` plus every deletion-vector carrier (a
+    rewrite materializes the deletion); with ``zorder_by``, every
+    file (re-clustering rewrites the layout). ``(candidates, their
+    bytes)``, or None when the run is skipped: fewer than two
+    candidates and none carrying a deletion vector."""
+    sizes = {}
+    for f in files:
+        try:
+            sizes[f] = size_of(f)
+        except OSError:
+            sizes[f] = target_file_bytes  # vanished/odd: not a candidate
+    cand = [
+        f for f in files
+        if zorder_by or sizes[f] < target_file_bytes or has_dv(f)
+    ]
+    if len(cand) < 2 and not any(has_dv(f) for f in cand):
+        return None
+    return cand, sum(sizes[f] for f in cand)
+
+
+def _compaction_layout(
+    df: DataFrame, part_cols: list[str], zorder_by, total_bytes: int,
+    target_file_bytes: int, n_files: int,
+) -> DataFrame:
+    """OPTIMIZE's rewrite layout, shared by every log: ``ceil(bytes /
+    target)`` outputs range-partitioned on (partition cols, z-key) so
+    each task covers a contiguous slice of one partition's key space,
+    sorted within tasks (tight row-group stats) — or coalesced when
+    there are no keys."""
+    n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
+    keys: list = list(part_cols)
+    if zorder_by:
+        from .layout import zorder_key
+
+        joined, z = zorder_key(df, zorder_by)
+        df = joined.withColumn("_z", z).select(*df.columns, "_z")
+        keys.append("_z")
+    if not keys:
+        return df.coalesce(min(n_out, n_files))
+    out = df.repartitionByRange(n_out, *keys).sortWithinPartitions(*keys)
+    return out.drop("_z") if zorder_by else out
+
+
 def _coerce_bound(bound, tag: str):
     """Convert a caller bound to the stored stat domain for ``tag``;
     None when incomparable (the file is then kept)."""
@@ -1144,95 +1413,6 @@ def _file_may_match(stats: dict | None, col: str, lo, hi) -> bool:
     hi_c = _coerce_bound(hi, s["t"])
     if hi_c is not None and s["min"] > hi_c:
         return False
-    return True
-
-
-_IN = object()  # sentinel: normalized IN-list bound, never a real lo
-
-
-def _norm_where(where: dict) -> dict[str, tuple]:
-    """Normalize a predicate spec: a scalar value means equality —
-    ``{col: v}`` ≡ ``{col: (v, v)}`` — a tuple is an inclusive range
-    ``(lo, hi)``, and a list/set is an IN-list (normalized to
-    ``(_IN, values)``): the multi-key point lookup a CDC apply or
-    key backfill does, pruned per value through stats AND bloom."""
-    out = {}
-    for c, b in where.items():
-        if isinstance(b, (list, set, frozenset)):
-            out[c] = (_IN, tuple(b))
-        elif isinstance(b, tuple):
-            out[c] = b
-        else:
-            out[c] = (b, b)
-    return out
-
-
-def _bound_may_match(stats: dict | None, col: str, bound: tuple) -> bool:
-    """Stats-only keep test for one normalized bound (range or IN)."""
-    if bound[0] is _IN:
-        return any(_file_may_match(stats, col, v, v) for v in bound[1])
-    return _file_may_match(stats, col, bound[0], bound[1])
-
-
-def prune_files(
-    table_root: str,
-    where: dict,
-    version: int | None = None,
-) -> tuple[int, list[str], list[str]]:
-    """(version, kept files, pruned files) for a conjunction of range
-    predicates ``{col: (lo, hi)}`` (either bound may be None for a
-    one-sided range; a bare scalar means equality; a list/set means
-    IN — pruned per value through stats and bloom). Kept ⊇ every
-    file that can hold a matching row."""
-    where = _norm_where(where)
-    v, m = snapshot_with_stats(table_root, version)
-    root = _root(table_root)
-    io = _io(table_root)
-    io = None if _is_local(io) else io
-    bloom_cache: dict = {}
-    kept, pruned = [], []
-    for f in sorted(m):
-        ok = _keep_file(root, f, m[f], where, bloom_cache, io=io)
-        (kept if ok else pruned).append(f)
-    return v, kept, pruned
-
-
-def _keep_file(
-    root: str, rel: str, stats, where_norm: dict, bloom_cache: dict,
-    io=None,
-) -> bool:
-    """Conjunction of every skipping signal we have for one file:
-    min/max/null stats first (free — already folded), then the bloom
-    sidecar for equality bounds, plus the hive partition DIRECTORY for
-    predicates on partition columns (their values are in the path,
-    never in footers). IN-lists test per value — a file survives only
-    if SOME value passes every signal. False only on PROOF of no
-    match."""
-    for c, bound in where_norm.items():
-        if bound[0] is _IN:
-            if not any(
-                _file_may_match(stats, c, v, v)
-                and _partition_may_match(rel, c, v)
-                and _bloom_may_match(
-                    root, rel, c, v, v, bloom_cache, io=io
-                )
-                for v in bound[1]
-            ):
-                return False
-            continue
-        lo, hi = bound
-        if not _file_may_match(stats, c, lo, hi):
-            return False
-        if (
-            lo is not None
-            and lo == hi
-            and not _partition_may_match(rel, c, lo)
-        ):
-            return False
-        if not _bloom_may_match(
-            root, rel, c, lo, hi, bloom_cache, io=io
-        ):
-            return False
     return True
 
 
@@ -1901,115 +2081,7 @@ def _read_files(
         df = df.join(dvdf, ["__file", "__pos"], "left_anti")
     if sidecars and not keep_meta:
         df = df.drop("__file", "__pos")
-    if where:
-        for col, bound in where.items():
-            if bound[0] is _IN:
-                df = df.filter(
-                    F.col(col).isin(*bound[1]) if bound[1] else F.lit(False)
-                )
-                continue
-            lo, hi = bound
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-    return df
-
-
-def _prune_arrow_local(
-    table_root: str, tbl, where_norm: dict
-) -> tuple[list[str], dict[str, list[dict]]]:
-    """Driver-side prune over the Arrow fold table (small snapshots):
-    same per-file keep test, stats JSON parsed lazily per row, dv
-    parsed only for survivors."""
-    root = _root(table_root)
-    io = _io(table_root)
-    io = None if _is_local(io) else io
-    cache: dict = {}
-    kept, dv = [], {}
-    for rel, st_j, dv_j in zip(
-        tbl.column("rel").to_pylist(),
-        tbl.column("stats").to_pylist(),
-        tbl.column("dv").to_pylist(),
-    ):
-        stats = json.loads(st_j) if st_j else None
-        if _keep_file(root, rel, stats, where_norm, cache, io=io):
-            kept.append(rel)
-            if dv_j:
-                es = json.loads(dv_j)
-                if es:
-                    dv[rel] = es
-    return sorted(kept), dv
-
-
-def _prune_arrow_distributed(
-    spark: SparkSession, table_root: str, tbl, where_norm: dict
-) -> tuple[list[str], dict[str, list[dict]]]:
-    """Data skipping as a SPARK JOB (snapshots past
-    :data:`DISTRIBUTED_PRUNE_AT`): the fold table ships to executors
-    via Arrow, each task runs the same conservative keep test —
-    min/max stats, hive partition dirs, and bloom sidecars (opened
-    executor-side, so the point-lookup index reads in parallel too) —
-    and ONLY SURVIVORS return to the driver. The full live-file list
-    never materializes in driver Python; driver cost is bounded by the
-    post-prune file count, which is what the scan needs anyway."""
-    import math
-
-    root = _root(table_root)
-    io = _io(table_root)
-    io = None if _is_local(io) else io  # captured by the task below
-    # the _IN sentinel is identity-compared; ship a neutral encoding
-    # and rebuild against the executor's own module instance
-    ser = {
-        c: (("in", list(b[1])) if b[0] is _IN else ("range", b[0], b[1]))
-        for c, b in where_norm.items()
-    }
-
-    def _task(batches):
-        import json as _json
-
-        import pandas as _pd
-
-        from django_datastream_spark import txnlog as TL
-
-        wn = {
-            c: (
-                (TL._IN, tuple(s[1]))
-                if s[0] == "in"
-                else (s[1], s[2])
-            )
-            for c, s in ser.items()
-        }
-        cache: dict = {}
-        for pdf in batches:
-            keep_rel, keep_dv = [], []
-            for rel, st_j, dv_j in zip(
-                pdf["rel"], pdf["stats"], pdf["dv"]
-            ):
-                stats = (
-                    _json.loads(st_j)
-                    if isinstance(st_j, str) and st_j
-                    else None
-                )
-                if TL._keep_file(root, rel, stats, wn, cache, io=io):
-                    keep_rel.append(rel)
-                    keep_dv.append(
-                        dv_j if isinstance(dv_j, str) else None
-                    )
-            yield _pd.DataFrame({"rel": keep_rel, "dv": keep_dv})
-
-    n = tbl.num_rows
-    fdf = spark.createDataFrame(tbl.to_pandas()).repartition(
-        max(8, min(1024, math.ceil(n / 20_000)))
-    )
-    kept, dv = [], {}
-    for r in fdf.mapInPandas(_task, "rel string, dv string").collect():
-        kept.append(r["rel"])
-        if r["dv"]:
-            es = json.loads(r["dv"])
-            if es:
-                dv[r["rel"]] = es
-    return sorted(kept), dv
+    return _residual(df, where) if where else df
 
 
 def txn_read(
@@ -2046,19 +2118,9 @@ def txn_read(
         schema = table_schema(table_root, v)
     if where:
         where = _norm_where(where)
-        if tbl.num_rows >= DISTRIBUTED_PRUNE_AT and getattr(
-            _io(table_root), "executor_safe", True
-        ):
-            files, dv = _prune_arrow_distributed(
-                spark, table_root, tbl, where
-            )
-        else:
-            # small snapshot — or a driver-only FileIO (HadoopFileIO)
-            # that cannot ship into tasks: bounded driver loop
-            files, dv = _prune_arrow_local(table_root, tbl, where)
-    else:
-        files = sorted(tbl.column("rel").to_pylist())
-        dv = _dv_from_arrow(tbl)
+        tbl = _prune_fold(spark, table_root, tbl, where)
+    files = sorted(tbl.column("rel").to_pylist())
+    dv = _dv_from_arrow(tbl)
     if not files:
         if schema is None:
             raise ValueError(
@@ -2591,7 +2653,7 @@ def txn_count(
         if s is None:
             return False
         for col, bound in where.items():
-            if bound[0] is _IN:
+            if isinstance(bound, _In):
                 return False  # IN: per-row membership — always scan
             lo, hi = bound
             cs = (s.get("cols") or {}).get(col)
@@ -2600,11 +2662,11 @@ def txn_count(
             if cs.get("nulls") != 0:
                 return False  # NULLs fail the predicate: must scan
             if lo is not None:
-                lo_c = _coerce_bound(lo, cs["t"])
+                lo_c = _as_bound(lo, cs["t"])
                 if lo_c is None or cs["min"] < lo_c:
                     return False
             if hi is not None:
-                hi_c = _coerce_bound(hi, cs["t"])
+                hi_c = _as_bound(hi, cs["t"])
                 if hi_c is None or cs["max"] > hi_c:
                     return False
         return True
@@ -2612,9 +2674,7 @@ def txn_count(
     total = 0
     boundary = []
     for f in sorted(m):
-        if not all(
-            _bound_may_match(m[f], c, b) for c, b in where.items()
-        ):
+        if not _keep_file((m[f] or {}).get("cols"), None, where_norm=where):
             continue  # provably empty for the range
         if _fully_inside(m[f]):
             total += _rows_of(f, m[f])
@@ -2709,48 +2769,25 @@ def txn_optimize(
     root = _root(table_root)
     io = _io(table_root)
     base_ver, m, dv = _fold(table_root)
-    files = sorted(m)
-    sizes = {}
-    for f in files:
-        try:
-            sizes[f] = io.size(os.path.join(root, f))
-        except OSError:
-            sizes[f] = target_file_bytes  # vanished/odd: not a candidate
-    if zorder_by:
-        cand = files
-    else:
-        # small files, plus every DV-carrying file: rewriting it
-        # MATERIALIZES the deletion (the fold drops the vector with
-        # the file), reclaiming dead rows and sidecars
-        cand = [
-            f for f in files if sizes[f] < target_file_bytes or dv.get(f)
-        ]
-    if len(cand) < 2 and not any(dv.get(f) for f in cand):
+    plan = _plan_compaction(
+        sorted(m), lambda f: io.size(os.path.join(root, f)),
+        target_file_bytes, zorder_by, has_dv=lambda f: bool(dv.get(f)),
+    )
+    if plan is None:
         return {
             "version": base_ver,
             "rewritten_files": 0,
             "new_files": 0,
             "skipped": True,
         }
+    cand, total = plan
     part_cols = _partition_cols_of(cand)
     df = _read_files(
         spark, table_root, cand, schema=table_schema(table_root), dv=dv
     )
-    total = sum(sizes[f] for f in cand)
-    n_out = max(1, -(-total // target_file_bytes))  # ceil
-    keys: list = list(part_cols)
-    if zorder_by:
-        from .layout import zorder_key
-
-        joined, z = zorder_key(df, zorder_by)
-        df = joined.withColumn("_z", z).select(*df.columns, "_z")
-        keys.append("_z")
-    if keys:
-        out = df.repartitionByRange(n_out, *keys).sortWithinPartitions(*keys)
-        if zorder_by:
-            out = out.drop("_z")
-    else:
-        out = df.coalesce(min(n_out, len(cand)))
+    out = _compaction_layout(
+        df, part_cols, zorder_by, total, target_file_bytes, len(cand)
+    )
     tag = uuid.uuid4().hex[:12]
     adds = stage_files(spark, out, table_root, part_cols, tag)
     ver = commit(

@@ -135,6 +135,31 @@ def test_engine_time_travel_is_commit_granular(engine):
         engine.tables.read_table_at("points_raw", 999)
 
 
+def test_agg_time_travel_is_commit_granular(engine):
+    """Under TXN_AGG, points_agg versions are commit versions too: the
+    first downsample's commit stays readable after a second one."""
+    engine.tables.TXN_AGG = True
+    sid = _ingest(engine, n=90)
+    engine.downsample_streams(until=ts(90))
+    engine.append_multiple(
+        [
+            {"stream_id": sid, "timestamp": ts(90 + i), "value": 1.0}
+            for i in range(90)
+        ]
+    )
+    engine.downsample_streams(until=ts(3600))
+    vs = engine.tables.snapshot_versions("points_agg")
+    assert vs == list(
+        range(1, TL.latest_version(engine.tables.points_agg_path) + 1)
+    )
+    assert len(vs) >= 2
+    first = engine.tables.read_table_at("points_agg", vs[0]).count()
+    now = engine.tables.read_points_agg().count()
+    assert 0 < first < now
+    with pytest.raises(ValueError, match="not in log"):
+        engine.tables.read_table_at("points_agg", 999)
+
+
 def test_streaming_ingest_lands_as_commits(spark, tmp_path):
     """StreamingIngest writes through append_points_raw, so with
     TXN_POINTS each micro-batch is its own log commit — validation,
