@@ -76,6 +76,22 @@ def mirror_source(root: str) -> str | None:
     return None
 
 
+def check_layout_owner(root: str, fmt: str, err: type) -> None:
+    """Refuse OPTIMIZE on a txn-backed root whose ``fmt`` tree is a
+    DERIVED view: republish re-derives it from the txn log, so
+    compacting it would fork the trees. Only a conversion mirror
+    sourced from ``fmt`` owns its layout there."""
+    from .. import txnlog as TL
+
+    if TL.is_txn_table(root) and mirror_source(root) != fmt:
+        raise err(
+            f"{root}: this {fmt} tree is a DERIVED view of the txn log "
+            "— optimizing it directly would fork the trees; run "
+            "txn_optimize (engine-owned tables) or optimize the source "
+            "format (conversion mirrors), then re-publish/re-convert"
+        )
+
+
 def convert_delta_to_iceberg(
     spark: SparkSession,
     root: str,

@@ -39,9 +39,9 @@ checkpoint fold is COLUMNAR — add actions stay an Arrow table end to
 end (the tail's JSON commits fold as dicts, bounded by the checkpoint
 interval), so a 10⁵–10⁶-add snapshot resolves without materializing
 actions as driver Python objects; ``where=`` data skipping runs the
-per-file stats test as a DISTRIBUTED Spark job above
-:data:`DISTRIBUTED_PRUNE_AT` files, so only SURVIVING paths return to
-the driver. The data scan is one ``parquet`` load per PARTITION VALUE
+txn log's per-file keep test, as a DISTRIBUTED Spark job above
+``txnlog.DISTRIBUTED_PRUNE_AT`` files, so only SURVIVING adds return
+to the driver. The data scan is one ``parquet`` load per PARTITION VALUE
 COMBINATION when the layout is not hive-style, but Delta writers emit
 hive-style paths (``p=1/part-….parquet``), detected here and read as
 ONE scan with ``basePath`` so Spark derives partition columns itself.
@@ -90,13 +90,6 @@ _SUPPORTED_READER_FEATURES = {
     # sources/roaring.py and apply as a (__file, __pos) anti-join
     "deletionVectors",
 }
-
-#: snapshots with at least this many live adds run ``where=`` data
-#: skipping as a distributed Spark job (mirror of
-#: ``txnlog.DISTRIBUTED_PRUNE_AT``); below it, a driver loop is faster
-#: than a job launch.
-DISTRIBUTED_PRUNE_AT = 10_000
-
 
 def _adds_arrow_schema():
     """Canonical Arrow layout for live add-actions — the columnar
@@ -468,12 +461,8 @@ def _fill_from_parsed(part, sub):
                     if row.get(k) is not None:
                         j[k] = row[k]
                 # dates/timestamps serialize ISO-'T' (isoformat) —
-                # delta-spark's JSON-stats form and what where=
-                # bounds use; str(datetime) would emit the space
-                # separator, and ' ' < 'T' makes lexicographic
-                # pruning WRONGLY drop files sharing the bound's
-                # date. _may_match also normalizes the separator as
-                # a belt-and-braces guard for foreign stats.
+                # delta-spark's JSON-stats form; the read side parses
+                # either separator by the column's schema type.
                 out.append(json.dumps(
                     j,
                     default=lambda o: (
@@ -739,16 +728,14 @@ def _hive_layout(
     """True when every file path encodes every partition column as a
     hive-style ``col=value`` directory matching its partitionValues —
     the layout Delta writers emit, enabling a single basePath scan."""
+    from .. import txnlog as TL
+
     for rel, pv in zip(rels, pvs):
-        segs = urllib.parse.unquote(rel).split("/")[:-1]
-        found = {}
-        for s in segs:
-            if "=" in s:
-                k, _, val = s.partition("=")
-                found[k] = urllib.parse.unquote(val)
+        found = TL._hive_parts(urllib.parse.unquote(rel))
         for c in part_cols:
             want = pv.get(c)
             got = found.get(c)
+            got = None if got is None else urllib.parse.unquote(got)
             if want is None:
                 if got not in (None, "__HIVE_DEFAULT_PARTITION__"):
                     return False
@@ -894,150 +881,6 @@ def _delta_file_meta(types: dict, part_cols: set, pv, stats):
         ):
             cols[c] = {"t": "null"}
     return cols, None, None
-
-
-def _prune_adds_local(adds, where: dict, part_cols: set):
-    """Driver-loop data skipping (below the distributed threshold):
-    boolean-mask the Arrow add set without materializing it."""
-    import pyarrow as pa
-
-    mask = [
-        _may_match(
-            dict(pv or []), st, where, part_cols
-        )
-        for pv, st in zip(
-            adds.column("partitionValues").to_pylist(),
-            adds.column("stats").to_pylist(),
-        )
-    ]
-    return adds.filter(pa.array(mask, pa.bool_()))
-
-
-def _prune_adds_distributed(
-    spark: SparkSession, adds, where: dict, part_cols: set
-):
-    """Data skipping as a SPARK JOB (mirror of
-    ``txnlog._prune_arrow_distributed``): the (path, partitionValues,
-    stats) columns ship to executors via Arrow, each task runs the
-    same conservative keep test, and ONLY SURVIVING paths return to
-    the driver — the full stats column never parses driver-side."""
-    import math
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    ship = adds.select(["path", "partitionValues", "stats"])
-    n = ship.num_rows
-    fdf = spark.createDataFrame(ship).repartition(
-        max(8, min(1024, math.ceil(n / 20_000)))
-    )
-    wser = {c: (b[0], b[1]) for c, b in where.items()}
-    pcols = set(part_cols)
-
-    def _task(batches):
-        import pandas as _pd
-
-        from django_datastream_spark.sources import delta as DL
-
-        for pdf in batches:
-            keep = []
-            for path, pv, st in zip(
-                pdf["path"], pdf["partitionValues"], pdf["stats"]
-            ):
-                d = dict(pv) if pv is not None else {}
-                if DL._may_match(d, st, wser, pcols):
-                    keep.append(path)
-            yield _pd.DataFrame({"path": keep})
-
-    kept = [
-        r["path"] for r in fdf.mapInPandas(_task, "path string").collect()
-    ]
-    return adds.filter(
-        pc.is_in(
-            adds.column("path"),
-            value_set=pa.array(sorted(kept), pa.string()),
-        )
-    )
-
-
-def _may_match(pv: dict, stats, where: dict, part_cols: set) -> bool:
-    """Conservative keep test for one add-action's recorded metadata:
-    False only when the file's stats or partition value PROVE no row
-    satisfies every ``lo <= col <= hi``. Any coercion/comparison doubt
-    keeps."""
-    j = None
-    if stats is not None and not isinstance(stats, str):
-        # numpy/pandas NaN from the distributed path
-        try:
-            import math as _math
-
-            if isinstance(stats, float) and _math.isnan(stats):
-                stats = None
-        except TypeError:
-            pass
-    if stats:
-        try:
-            j = json.loads(stats) if isinstance(stats, str) else stats
-        except ValueError:
-            j = None
-    for col, (lo, hi) in where.items():
-        if col in part_cols:
-            raw = pv.get(col)
-            if raw is None:
-                continue  # null partition value: keep conservatively
-            # a partition file holds exactly one value for col
-            mn = mx = raw
-        elif j:
-            mn = (j.get("minValues") or {}).get(col)
-            mx = (j.get("maxValues") or {}).get(col)
-        else:
-            continue
-        try:
-            if lo is not None and mx is not None:
-                a, b = _cmp_pair(mx, lo)
-                if a < b:
-                    return False  # whole file below the range
-            if hi is not None and mn is not None:
-                a, b = _cmp_pair(mn, hi)
-                if a > b:
-                    return False  # whole file above the range
-        except (TypeError, ValueError):
-            continue  # non-comparable stat types: keep
-    return True
-
-
-def _temporalish(s: str) -> bool:
-    return (
-        len(s) >= 11
-        and s[10] in (" ", "T")
-        and s[:10].replace("-", "").isdigit()
-        and s.count("-", 0, 10) == 2
-    )
-
-
-def _cmp_pair(v, bound):
-    """Coerce ``v`` to ``bound``'s type for a bound comparison, with
-    the TEMPORAL-STRING guard: ISO datetimes appear with either 'T'
-    or ' ' at position 10 depending on the writer, and comparing
-    mixed separators lexicographically mis-orders same-date values
-    (' ' < 'T'), wrongly pruning a file whose max shares the bound's
-    date. The separator normalizes to 'T' ONLY when BOTH sides are
-    temporal-shaped — normalizing one side of an ordinary string
-    column's comparison would itself mis-order (pruning must stay
-    conservative for arbitrary strings). Genuinely non-comparable
-    values still raise and the caller keeps the file."""
-    out = type(bound)(v)
-    if (
-        isinstance(out, str)
-        and isinstance(bound, str)
-        and _temporalish(out)
-        and _temporalish(bound)
-    ):
-        return (
-            out[:10] + "T" + out[11:],
-            bound[:10] + "T" + bound[11:],
-        )
-    return out, bound
 
 
 def _column_mapping(md: dict) -> dict | None:
@@ -2045,22 +1888,18 @@ def _delta_stats_json(st: dict | None) -> str | None:
         return None  # unserializable stat: the file just isn't pruned
 
 
-def _hive_pv(rel: str, part_cols: list[str]) -> dict:
-    found = {}
-    for seg in rel.split(os.sep)[:-1]:
-        if "=" in seg:
-            k, _, val = seg.partition("=")
-            found[k] = urllib.parse.unquote(val)
-    return {c: found.get(c) for c in part_cols}
-
-
 def _pv_of(rel: str, part_cols: list[str]) -> dict:
     """partitionValues for a file Spark's own writer staged: hive
     dirs decoded, the null sentinel mapped back to a null value (the
     spec stores null partition values as null, not the dir name)."""
+    from .. import txnlog as TL
+
+    found = TL._hive_parts(rel)
     return {
-        k: (None if v == "__HIVE_DEFAULT_PARTITION__" else v)
-        for k, v in _hive_pv(rel, part_cols).items()
+        c: urllib.parse.unquote(found[c])
+        if found.get(c) not in (None, "__HIVE_DEFAULT_PARTITION__")
+        else None
+        for c in part_cols
     }
 
 
@@ -2244,12 +2083,7 @@ def publish_delta(
         dc = bool(c.get("data_change", True))
         if v == start and not published:
             part_cols = sorted(
-                {
-                    seg.partition("=")[0]
-                    for rel in live
-                    for seg in rel.split(os.sep)[:-1]
-                    if "=" in seg
-                }
+                {k for rel in live for k in TL._hive_parts(rel)}
             )
         acts: list[dict] = []
         if v == 1:
@@ -2559,8 +2393,6 @@ def delta_streaming_sink(
         import time as _time
         import uuid as _uuid
 
-        from .. import txnlog as TL
-
         io = io_for(root)
         spark = df.sparkSession
         part_cols = list(partition_by or [])
@@ -2622,36 +2454,8 @@ def delta_streaming_sink(
         if missing:
             raise ValueError(f"partition columns {missing} not in batch")
 
-        staging = os.path.join(root, f"_staging_{_uuid.uuid4().hex}")
-        try:
-            w = df.write.mode("overwrite")
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(io.spark_path(staging))
-            rels = _move_staged_parquet(staging, root, io=io)
-        finally:
-            io.delete_prefix(staging)
-
-        stats = TL.collect_file_stats(root, rels, spark, io=io)
+        adds = _write_adds(spark, df, root, part_cols, io, True)
         now_ms = int(_time.time() * 1000)
-        adds = []
-        for rel in sorted(rels):
-            st = stats.get(rel)
-            if st and st.get("rows") == 0:
-                io.delete(os.path.join(root, rel))
-                continue  # an empty task output: not a data file
-            adds.append(
-                {
-                    "add": {
-                        "path": _quote_rel(rel),
-                        "partitionValues": _pv_of(rel, part_cols),
-                        "size": io.size(os.path.join(root, rel)),
-                        "modificationTime": now_ms,
-                        "dataChange": True,
-                        "stats": _delta_stats_json(st),
-                    }
-                }
-            )
 
         head_actions: list[dict] = []
         if evolved_meta is not None:
@@ -2748,6 +2552,46 @@ def _move_staged_parquet(
     return sorted(rels)
 
 
+def _write_adds(
+    spark: SparkSession, df: DataFrame, root: str, part_cols: list[str],
+    io: FileIO, data_change: bool,
+) -> list[dict]:
+    """Write ``df`` (hive-partitioned by ``part_cols``) through a
+    staging dir; one add action, with footer stats, per non-empty
+    file — the data half of the sink's and OPTIMIZE's commits."""
+    import time
+    import uuid
+
+    from .. import txnlog as TL
+
+    staging = os.path.join(root, f"_staging_{uuid.uuid4().hex}")
+    try:
+        w = df.write.mode("overwrite")
+        if part_cols:
+            w = w.partitionBy(*part_cols)
+        w.parquet(io.spark_path(staging))
+        rels = _move_staged_parquet(staging, root, io=io)
+    finally:
+        io.delete_prefix(staging)
+    stats = TL.collect_file_stats(root, rels, spark, io=io)
+    now_ms = int(time.time() * 1000)
+    adds = []
+    for rel in sorted(rels):
+        st = stats.get(rel)
+        if st and st.get("rows") == 0:
+            io.delete(os.path.join(root, rel))
+            continue  # an empty task output: not a data file
+        adds.append({"add": {
+            "path": _quote_rel(rel),
+            "partitionValues": _pv_of(rel, part_cols),
+            "size": io.size(os.path.join(root, rel)),
+            "modificationTime": now_ms,
+            "dataChange": data_change,
+            "stats": _delta_stats_json(st),
+        }})
+    return adds
+
+
 def optimize_delta(
     spark: SparkSession,
     root: str,
@@ -2791,18 +2635,9 @@ def optimize_delta(
     import time as _time
 
     from .. import txnlog as TL
+    from .convert import check_layout_owner
 
-    if TL.is_txn_table(root):
-        from .convert import mirror_source
-
-        if mirror_source(root) != "delta":
-            raise DeltaUnsupportedError(
-                f"{root}: this _delta_log is a DERIVED view of the "
-                "txn log — optimizing it directly would fork the "
-                "trees; run txn_optimize (engine-owned tables) or "
-                "optimize the source format (conversion mirrors), "
-                "then re-publish/re-convert"
-            )
+    check_layout_owner(root, "delta", DeltaUnsupportedError)
     io = io_for(root)
     _v, md, adds = delta_snapshot(root)
     part_cols = list(md.get("partitionColumns") or [])
@@ -2822,42 +2657,13 @@ def optimize_delta(
         target_file_bytes, len(cand),
     )
 
-    import uuid as _uuid
-
-    staging = os.path.join(root, f"_staging_{_uuid.uuid4().hex}")
-    try:
-        w = out.write.mode("overwrite")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(io.spark_path(staging))
-        rels = _move_staged_parquet(staging, root, io=io)
-    finally:
-        io.delete_prefix(staging)
-
-    stats = TL.collect_file_stats(root, rels, spark, io=io)
+    adds = _write_adds(spark, out, root, part_cols, io, False)
     now_ms = int(_time.time() * 1000)
     actions = [
         {"remove": {"path": a["path"], "dataChange": False,
                     "deletionTimestamp": now_ms}}
         for a in sorted(cand, key=lambda a: a["path"])
-    ]
-    kept = []
-    for rel in sorted(rels):
-        st = stats.get(rel)
-        if st and st.get("rows") == 0:
-            io.delete(os.path.join(root, rel))
-            continue
-        kept.append(rel)
-        actions.append(
-            {"add": {
-                "path": _quote_rel(rel),
-                "partitionValues": _pv_of(rel, part_cols),
-                "size": io.size(os.path.join(root, rel)),
-                "modificationTime": now_ms,
-                "dataChange": False,
-                "stats": _delta_stats_json(st),
-            }}
-        )
+    ] + adds
     # commit at the FOLDED version + 1: a rival commit during the
     # rewrite job (a DV delete on a candidate, a second optimize)
     # then surfaces as FileExistsError instead of silently landing on
@@ -2867,7 +2673,7 @@ def optimize_delta(
     return {
         "version": _v + 1,
         "rewritten_files": len(cand),
-        "new_files": len(kept),
+        "new_files": len(adds),
         "bytes_before": total,
         "skipped": False,
     }

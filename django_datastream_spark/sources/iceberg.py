@@ -327,7 +327,7 @@ def _decode_manifest_entries(
                     f"content={c} entry inside a DATA manifest"
                 )
             if where and not TL._keep_file(
-                _iceberg_file_stats(df, fields), None, where_norm=where
+                where, _iceberg_file_stats(df, fields)
             ):
                 continue
             data.append((df["file_path"], seq))
@@ -428,11 +428,11 @@ def iceberg_live_files(
     spark: SparkSession | None = None,
 ) -> tuple[dict, list[str]]:
     """(metadata, live data-file paths) at a snapshot (default:
-    current). ``where={col: (lo, hi)}`` prunes files through the
-    manifests' recorded lower/upper bounds (spec Appendix D
-    single-value binary, decoded per the column's declared type) —
-    Iceberg's own data skipping, conservative: missing/unmapped
-    bounds keep the file. A snapshot carrying POSITION DELETES raises
+    current). ``where={col: (lo, hi)}`` (a scalar means equality, a
+    list IN) prunes files through the manifests' recorded lower/upper
+    bounds (spec Appendix D single-value binary, decoded per the
+    column's declared type) with the txn log's keep test —
+    conservative: missing/unmapped bounds keep the file. A snapshot carrying POSITION DELETES raises
     here (the flat file list would resurrect deleted rows) — use
     :func:`read_iceberg`, which applies them.
 
@@ -507,36 +507,6 @@ def _decode_manifests_distributed(
             _task, "k string, f string, q long, e string"
         ).collect()
     ]
-
-
-def _bounds_dict(raw) -> dict:
-    if isinstance(raw, list):
-        return {e["key"]: e["value"] for e in raw}
-    return raw or {}
-
-
-def _entry_may_match(df: dict, where: dict, fields: dict) -> bool:
-    """Conservative keep test against a data_file's recorded bounds
-    (``fields``: name → (field-id, type), hoisted by the caller so the
-    map builds once per manifest, not once per entry): False only when
-    the bounds PROVE no row satisfies every range."""
-    lo_map = _bounds_dict(df.get("lower_bounds"))
-    hi_map = _bounds_dict(df.get("upper_bounds"))
-    for col, (lo, hi) in where.items():
-        if col not in fields:
-            continue
-        fid, typ = fields[col]
-        f_lo = (
-            _decode_bound(lo_map[fid], typ) if fid in lo_map else None
-        )
-        f_hi = (
-            _decode_bound(hi_map[fid], typ) if fid in hi_map else None
-        )
-        if lo is not None and f_hi is not None and f_hi < lo:
-            return False  # whole file below the range
-        if hi is not None and f_lo is not None and f_lo > hi:
-            return False  # whole file above the range
-    return True
 
 
 def _iceberg_file_stats(df: dict, fields: dict) -> dict:
@@ -801,74 +771,62 @@ _MANIFEST_SCHEMA = {
 }
 
 
+#: spec Appendix D single-value binary: struct format per fixed-width
+#: type (dates as epoch days, timestamps as epoch microseconds)
+_BOUND_FMT = {
+    "int": "<i", "date": "<i", "long": "<q", "timestamp": "<q",
+    "timestamptz": "<q", "float": "<f", "double": "<d",
+}
+
+
 def _encode_bound(v, iceberg_type: str) -> bytes | None:
-    """Spec Appendix D single-value binary serialization (the subset
-    this reader prunes on) of a column's Python value."""
+    """A column's Python value as its Appendix D single-value binary
+    (None: a type this reader does not prune on)."""
     import datetime
 
     if v is None:
         return None
-    if iceberg_type == "date" and isinstance(v, datetime.date):
-        v = (v - datetime.date(1970, 1, 1)).days
-    if iceberg_type in ("timestamp", "timestamptz"):
-        if v.tzinfo is not None:
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return struct.pack("<q", (
-            v - datetime.datetime(1970, 1, 1)
-        ) // datetime.timedelta(microseconds=1))
-    if iceberg_type in ("int", "date"):
-        return struct.pack("<i", int(v))
-    if iceberg_type == "long":
-        return struct.pack("<q", int(v))
-    if iceberg_type == "boolean":
-        return b"\x01" if v else b"\x00"
-    if iceberg_type == "float":
-        return struct.pack("<f", float(v))
-    if iceberg_type == "double":
-        return struct.pack("<d", float(v))
     if iceberg_type == "string":
         return str(v).encode("utf-8")
-    return None
-
-
-def _decode_bound(raw: bytes, iceberg_type: str):
-    try:
-        if iceberg_type == "int" or iceberg_type == "date":
-            return struct.unpack("<i", raw)[0]
-        if iceberg_type == "long":
-            return struct.unpack("<q", raw)[0]
-        if iceberg_type == "float":
-            return struct.unpack("<f", raw)[0]
-        if iceberg_type == "double":
-            return struct.unpack("<d", raw)[0]
-        if iceberg_type == "string":
-            return raw.decode("utf-8")
-    except (struct.error, UnicodeDecodeError):
-        return None
-    return None  # unmapped type: never prune on it
+    if iceberg_type == "boolean":
+        return b"\x01" if v else b"\x00"
+    if isinstance(v, datetime.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        v = (v - datetime.datetime(1970, 1, 1)) // datetime.timedelta(
+            microseconds=1
+        )
+    elif isinstance(v, datetime.date):
+        v = (v - datetime.date(1970, 1, 1)).days
+    fmt = _BOUND_FMT.get(iceberg_type)
+    return None if fmt is None else struct.pack(fmt, v)
 
 
 def _bound_value(raw: bytes, iceberg_type: str):
-    """Spec Appendix D single-value binary → the Python value of the
-    column (None: unmapped type or malformed bytes — never pruned)."""
+    """Appendix D single-value binary → the column's Python value
+    (None: unmapped type or malformed bytes — never pruned on)."""
     import datetime
 
-    epoch = datetime.datetime(1970, 1, 1)
+    fmt = _BOUND_FMT.get(iceberg_type)
     try:
+        if iceberg_type == "string":
+            return raw.decode("utf-8")
         if iceberg_type == "boolean":
             return raw[:1] != b"\x00"
+        if fmt is None:
+            return None
+        v = struct.unpack(fmt, raw)[0]
         if iceberg_type == "date":
-            return (epoch + datetime.timedelta(days=struct.unpack("<i", raw)[0])).date()
-        if iceberg_type in ("timestamp", "timestamptz"):
-            v = epoch + datetime.timedelta(
-                microseconds=struct.unpack("<q", raw)[0]
+            return datetime.date(1970, 1, 1) + datetime.timedelta(days=v)
+        if iceberg_type.startswith("timestamp"):
+            v = datetime.datetime(1970, 1, 1) + datetime.timedelta(
+                microseconds=v
             )
             if iceberg_type == "timestamptz":
                 v = v.replace(tzinfo=datetime.timezone.utc)
-            return v
-    except (struct.error, OverflowError):
+    except (struct.error, UnicodeDecodeError, OverflowError):
         return None
-    return _decode_bound(raw, iceberg_type)
+    return v
 
 
 def _stat_python(e: dict, side: str):
@@ -2219,35 +2177,7 @@ def iceberg_streaming_sink(
         else:
             fields = _spark_fields_to_ice(df.schema, name_to_id)
 
-        # data: distributed write, promoted under data/ (rename on
-        # POSIX, server-side copy+delete on object stores — no reader
-        # follows a file until the metadata CAS references it)
-        staging = os.path.join(root, f"_staging_{_uuid.uuid4().hex}")
-        rels = []
-        try:
-            df.write.mode("overwrite").parquet(io.spark_path(staging))
-            io.makedirs(os.path.join(root, "data"))
-            for fn in io.walk_files(staging):
-                if not fn.endswith(".parquet") or os.sep in fn:
-                    continue
-                rel = os.path.join("data", fn)
-                io.move_file(
-                    os.path.join(staging, fn), os.path.join(root, rel)
-                )
-                rels.append(rel)
-        finally:
-            io.delete_prefix(staging)
-        import pyarrow.parquet as _pq
-
-        kept = []
-        for r in rels:
-            full = os.path.join(root, r)
-            src = io.parquet_source(full)
-            if _pq.ParquetFile(src).metadata.num_rows > 0:
-                kept.append(r)
-            else:
-                io.delete(full)  # an empty task output: not a data file
-        rels = kept
+        rels = _write_data_files(df, root, io)
 
         import hashlib as _hl
 
@@ -2416,6 +2346,32 @@ def iceberg_streaming_sink(
     return _sink
 
 
+def _write_data_files(df: DataFrame, root: str, io: FileIO) -> list[str]:
+    """Distributed write of ``df``, promoted under ``data/`` (rename on
+    POSIX, server-side copy+delete on object stores — no reader
+    follows a file until the metadata CAS references it); returns the
+    table-relative paths of the non-empty files."""
+    import uuid
+
+    from .. import txnlog as TL
+    from .delta import _move_staged_parquet
+
+    staging = os.path.join(root, f"_staging_{uuid.uuid4().hex}")
+    try:
+        df.write.mode("overwrite").parquet(io.spark_path(staging))
+        io.makedirs(os.path.join(root, "data"))
+        rels = _move_staged_parquet(staging, root, "data", io=io)
+    finally:
+        io.delete_prefix(staging)
+    kept = []
+    for rel in rels:
+        if (TL._stats_of_file(root, rel, io=io) or {}).get("rows") == 0:
+            io.delete(os.path.join(root, rel))  # an empty task output
+        else:
+            kept.append(rel)
+    return kept
+
+
 # ---------------------------------------------------------------------------
 # maintenance: OPTIMIZE (compaction as a replace snapshot) and
 # snapshot expiry — the Delta maintenance twins
@@ -2453,18 +2409,9 @@ def optimize_iceberg(
     import uuid as _uuid
 
     from .. import txnlog as _TLo
+    from .convert import check_layout_owner
 
-    if _TLo.is_txn_table(root):
-        from .convert import mirror_source
-
-        if mirror_source(root) != "iceberg":
-            raise IcebergUnsupportedError(
-                f"{root}: this metadata tree is a DERIVED view of "
-                "the txn log — optimizing it directly would fork "
-                "the trees; run txn_optimize (engine-owned tables) "
-                "or optimize the source format (conversion "
-                "mirrors), then re-publish/re-convert"
-            )
+    check_layout_owner(root, "iceberg", IcebergUnsupportedError)
 
     # list the version FIRST, then fold from exactly that metadata:
     # the commit below pins its CAS to cur_v + 1, so a rival landing
@@ -2521,20 +2468,7 @@ def optimize_iceberg(
     out = _TLo._compaction_layout(
         df, [], None, total, target_file_bytes, len(cand)
     )
-    staging = os.path.join(root, f"_staging_{_uuid.uuid4().hex}")
-    rels = []
-    try:
-        out.write.mode("overwrite").parquet(io.spark_path(staging))
-        io.makedirs(os.path.join(root, "data"))
-        for fn in io.walk_files(staging):
-            if fn.endswith(".parquet") and os.sep not in fn:
-                rel = os.path.join("data", fn)
-                io.move_file(
-                    os.path.join(staging, fn), os.path.join(root, rel)
-                )
-                rels.append(rel)
-    finally:
-        io.delete_prefix(staging)
+    rels = _write_data_files(out, root, io)
 
     import hashlib as _hl
 

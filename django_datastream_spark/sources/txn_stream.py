@@ -262,13 +262,7 @@ class TxnTableStreamReader(DataSourceStreamReader):
                 pa.array(i not in dead for i in range(tbl.num_rows))
             )
         # hive-encoded partition values live in the dir name, not the file
-        part_vals = {}
-        d = os.path.dirname(rel)
-        if d:
-            for seg in d.split(os.sep):
-                if "=" in seg:
-                    k, val = seg.split("=", 1)
-                    part_vals[k] = val
+        part_vals = TL._hive_parts(rel)
         n = tbl.num_rows
         arrays = []
         for f in self.schema.fields:

@@ -1129,7 +1129,7 @@ def _as_bound(bound, tag: str):
     return None
 
 
-def _stat_may_match(s: dict | None, lo, hi) -> bool:
+def _stat_keeps(s: dict | None, lo, hi) -> bool:
     """Conservative intersection test of one column's tagged stats
     with ``lo <= col <= hi``: False only when they PROVE no row of
     the file satisfies it."""
@@ -1137,10 +1137,10 @@ def _stat_may_match(s: dict | None, lo, hi) -> bool:
         return True
     if s["t"] == "null":
         return False  # every value NULL; comparisons never match
-    lo_c = None if lo is None else _as_bound(lo, s["t"])
+    lo_c = _as_bound(lo, s["t"])
     if lo_c is not None and s.get("max") is not None and s["max"] < lo_c:
         return False
-    hi_c = None if hi is None else _as_bound(hi, s["t"])
+    hi_c = _as_bound(hi, s["t"])
     if hi_c is not None and s.get("min") is not None and s["min"] > hi_c:
         return False
     return True
@@ -1178,21 +1178,22 @@ def _hive_parts(rel: str) -> dict[str, str]:
     return out
 
 
-def _part_may_match(got: str | None, value) -> bool:
+def _part_keeps(got: str | None, value) -> bool:
     """False only when the hive directory value ``got`` PROVABLY
     differs from ``value``. Only plain str/int values compare (their
     hive spelling is exact ``str(v)``); escaped (%xx) or exotic
     spellings keep the file — the residual filter still applies."""
-    if got is None or isinstance(value, bool):
-        return True
-    if not isinstance(value, (str, int)):
+    if got is None or isinstance(value, bool) or not isinstance(
+        value, (str, int)
+    ):
         return True
     want = str(value)
     return "%" in want or "%" in got or got == want
 
 
 def _keep_file(
-    stats: dict | None, parts: dict | None, bloom=None, *, where_norm: dict
+    where_norm: dict, stats: dict | None, parts: dict | None = None,
+    bloom=None,
 ) -> bool:
     """THE data-skipping test of every log (txn, Delta, Iceberg): each
     log translates one file's metadata into tagged column ``stats``
@@ -1205,10 +1206,10 @@ def _keep_file(
         s = (stats or {}).get(c)
         got = (parts or {}).get(c)
         if not any(
-            _stat_may_match(s, lo, hi)
-            and (lo is None or lo != hi or _part_may_match(got, lo))
+            _stat_keeps(s, lo, hi)
+            and (lo is None or lo != hi or _part_keeps(got, lo))
             and (bloom is None or bloom(c, lo, hi))
-            for lo, hi in ([(v, v) for v in b] if isinstance(b, _In) else [b])
+            for lo, hi in ([(v, v) for v in b] if isinstance(b, _In) else (b,))
         ):
             return False
     return True
@@ -1231,7 +1232,7 @@ def _prune(spark, tbl, cols: list[str], meta_of, where_norm: dict):
         rows = zip(*(tbl.column(c).to_pylist() for c in cols))
         keep = [
             i for i, row in enumerate(rows)
-            if _keep_file(*meta_of(*row), where_norm=where_norm)
+            if _keep_file(where_norm, *meta_of(*row))
         ]
         return tbl.take(pa.array(keep, pa.int64()))
     ship = tbl.select(cols).append_column(
@@ -1249,7 +1250,7 @@ def _prune(spark, tbl, cols: list[str], meta_of, where_norm: dict):
         for pdf in batches:
             keep = [
                 i for i, *row in zip(pdf["__i"], *(pdf[c] for c in cols))
-                if TL._keep_file(*meta_of(*row), where_norm=where_norm)
+                if TL._keep_file(where_norm, *meta_of(*row))
             ]
             yield _pd.DataFrame({"__i": _pd.Series(keep, dtype="int64")})
 
@@ -1282,7 +1283,7 @@ def _txn_file_meta(root: str, io, cache: dict, rel: str, st_j):
     return (
         (stats or {}).get("cols"),
         _hive_parts(rel),
-        lambda c, lo, hi: _bloom_may_match(
+        lambda c, lo, hi: _bloom_keeps(
             root, rel, c, lo, hi, cache, io=io
         ),
     )
@@ -1318,7 +1319,9 @@ def prune_files(
         .column("rel").to_pylist()
     )
     rels = sorted(tbl.column("rel").to_pylist())
-    return v, [f for f in rels if f in kept], [f for f in rels if f not in kept]
+    return (
+        v, [f for f in rels if f in kept], [f for f in rels if f not in kept]
+    )
 
 
 def _plan_compaction(
@@ -1367,74 +1370,6 @@ def _compaction_layout(
         return df.coalesce(min(n_out, n_files))
     out = df.repartitionByRange(n_out, *keys).sortWithinPartitions(*keys)
     return out.drop("_z") if zorder_by else out
-
-
-def _coerce_bound(bound, tag: str):
-    """Convert a caller bound to the stored stat domain for ``tag``;
-    None when incomparable (the file is then kept)."""
-    import datetime
-
-    if bound is None:
-        return None
-    if tag == "num":
-        return bound if isinstance(bound, (int, float, bool)) else None
-    if tag == "str":
-        return bound if isinstance(bound, str) else None
-    if tag == "ts":
-        if isinstance(bound, datetime.datetime):
-            if bound.tzinfo is not None:
-                bound = bound.astimezone(datetime.timezone.utc).replace(
-                    tzinfo=None
-                )
-            return bound.isoformat(timespec="microseconds")
-        return None
-    if tag == "date":
-        if isinstance(bound, datetime.datetime):
-            return None  # date-stat vs datetime bound: don't guess
-        if isinstance(bound, datetime.date):
-            return bound.isoformat()
-        return None
-    return None
-
-
-def _file_may_match(stats: dict | None, col: str, lo, hi) -> bool:
-    """Conservative intersection test: False only when the stats PROVE
-    no row of the file satisfies ``lo <= col <= hi``."""
-    if stats is None:
-        return True
-    s = (stats.get("cols") or {}).get(col)
-    if s is None:
-        return True
-    if s["t"] == "null":
-        return False  # every value NULL; comparisons never match
-    lo_c = _coerce_bound(lo, s["t"])
-    if lo_c is not None and s["max"] < lo_c:
-        return False
-    hi_c = _coerce_bound(hi, s["t"])
-    if hi_c is not None and s["min"] > hi_c:
-        return False
-    return True
-
-
-def _partition_may_match(rel: str, col: str, value) -> bool:
-    """False only when ``rel`` lives under a ``col=<other>`` hive
-    directory that PROVABLY differs from ``value``.  Only plain
-    str/int values compare (their hive spelling is exact ``str(v)``);
-    escaped (%xx) or exotic spellings keep the file — pruning here is
-    I/O-only, the residual filter still applies."""
-    if value is None or isinstance(value, bool):
-        return True
-    if not isinstance(value, (str, int)):
-        return True
-    want = str(value)
-    if "%" in want:
-        return True
-    pre = col + "="
-    for seg in rel.split(os.sep)[:-1]:
-        if seg.startswith(pre):
-            got = seg[len(pre):]
-            return "%" in got or got == want
-    return True
 
 
 # ------------------------------------------------------------------ #
@@ -1531,7 +1466,7 @@ def _bloom_load(root: str, rel: str, cache: dict, io=None):
     return side
 
 
-def _bloom_may_match(
+def _bloom_keeps(
     root: str, rel: str, col: str, lo, hi, cache: dict, io=None
 ) -> bool:
     """False only when the file's bloom filter PROVES ``col = lo``
@@ -2674,7 +2609,7 @@ def txn_count(
     total = 0
     boundary = []
     for f in sorted(m):
-        if not _keep_file((m[f] or {}).get("cols"), None, where_norm=where):
+        if not _keep_file(where, (m[f] or {}).get("cols")):
             continue  # provably empty for the range
         if _fully_inside(m[f]):
             total += _rows_of(f, m[f])
@@ -2725,12 +2660,7 @@ def txn_history(spark: SparkSession, table_root: str) -> "DataFrame":
 def _partition_cols_of(rel_paths: list[str]) -> list[str]:
     """Partition column names encoded in hive-style dir segments of the
     committed file paths (``p=a/q=b/file.parquet`` → ``[p, q]``)."""
-    for rel in rel_paths:
-        d = os.path.dirname(rel)
-        if not d:
-            return []
-        return [seg.split("=", 1)[0] for seg in d.split(os.sep) if "=" in seg]
-    return []
+    return list(_hive_parts(rel_paths[0])) if rel_paths else []
 
 
 def txn_optimize(

@@ -1,8 +1,8 @@
 """Pins for the round-11 ADVICE items.
 
 1 (medium): struct-stats temporal pruning — parsed datetime stats must
-   serialize ISO-'T' and _may_match must normalize the T-vs-space
-   separator before lexicographic bound comparison; a file whose max
+   serialize ISO-'T', and the shared keep test reads timestamp stats and
+   bounds as instants whichever separator they carry; a file whose max
    shares the bound's date must never be pruned, while truly-outside
    files still prune.
 2 (low): cleanup_delta_log's retention floor is commit arithmetic on
@@ -18,11 +18,33 @@
 import json
 import os
 
+from django_datastream_spark import txnlog as TL
 from django_datastream_spark.sources import delta as DL
 from django_datastream_spark.sources.fileio import HadoopFileIO
 
 
 # ── 1: temporal separator guard ───────────────────────────────────────
+def _ts_meta(md=None):
+    """A Delta metaData whose schema carries a ``ts`` timestamp."""
+    md = dict(md or {"partitionColumns": [], "configuration": {}})
+    sch = json.loads(md.get("schemaString") or '{"fields": []}')
+    sch["type"] = "struct"
+    sch["fields"] = sch["fields"] + [
+        {"name": "ts", "type": "timestamp", "nullable": True, "metadata": {}}
+    ]
+    md["schemaString"] = json.dumps(sch)
+    return md
+
+
+def _keeps(stats, where) -> bool:
+    adds = DL._adds_from_dicts(
+        [{"path": "f", "partitionValues": {}, "stats": stats}]
+    )
+    return DL._prune_adds(
+        None, _ts_meta(), adds, TL._norm_where(where)
+    ).num_rows == 1
+
+
 def test_may_match_keeps_overlapping_file_across_separators():
     # stats in the space form (what json.dumps(default=str) used to
     # emit), bound in ISO-'T' form: the file's max (23:00) is AFTER
@@ -32,30 +54,30 @@ def test_may_match_keeps_overlapping_file_across_separators():
         "minValues": {"ts": "2024-01-05 01:00:00+00:00"},
         "maxValues": {"ts": "2024-01-05 23:00:00+00:00"},
     })
-    assert DL._may_match(
-        {}, stats, {"ts": ("2024-01-05T12:00:00+00:00", None)}, set()
+    assert _keeps(
+        stats, {"ts": ("2024-01-05T12:00:00+00:00", None)}
     )
     # and symmetrically for the upper bound
-    assert DL._may_match(
-        {}, stats, {"ts": (None, "2024-01-05T12:00:00+00:00")}, set()
+    assert _keeps(
+        stats, {"ts": (None, "2024-01-05T12:00:00+00:00")}
     )
     # truly-outside files still prune in BOTH separator mixes
-    assert not DL._may_match(
-        {}, stats, {"ts": ("2024-01-06T00:00:00+00:00", None)}, set()
+    assert not _keeps(
+        stats, {"ts": ("2024-01-06T00:00:00+00:00", None)}
     )
-    assert not DL._may_match(
-        {}, stats, {"ts": (None, "2024-01-04T00:00:00+00:00")}, set()
+    assert not _keeps(
+        stats, {"ts": (None, "2024-01-04T00:00:00+00:00")}
     )
     # bound in space form against T-form stats (foreign writers)
     stats_t = json.dumps({
         "minValues": {"ts": "2024-01-05T01:00:00"},
         "maxValues": {"ts": "2024-01-05T23:00:00"},
     })
-    assert DL._may_match(
-        {}, stats_t, {"ts": ("2024-01-05 12:00:00", None)}, set()
+    assert _keeps(
+        stats_t, {"ts": ("2024-01-05 12:00:00", None)}
     )
-    assert not DL._may_match(
-        {}, stats_t, {"ts": ("2024-01-06 00:00:00", None)}, set()
+    assert not _keeps(
+        stats_t, {"ts": ("2024-01-06 00:00:00", None)}
     )
 
 
@@ -115,7 +137,8 @@ def test_fill_from_parsed_serializes_temporals_iso_t(tmp_path):
     rows = [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2},
          "metaData": None, "add": None},
-        {"protocol": None, "metaData": _meta()["metaData"], "add": None},
+        {"protocol": None, "metaData": _ts_meta(_meta()["metaData"]),
+         "add": None},
     ] + [{"protocol": None, "metaData": None, "add": a} for a in adds]
     tbl = pa.Table.from_pylist(rows, schema=pa.schema(
         [("protocol", proto_t), ("metaData", meta_t), ("add", add_t)]
@@ -126,14 +149,15 @@ def test_fill_from_parsed_serializes_temporals_iso_t(tmp_path):
     with open(os.path.join(log, "_last_checkpoint"), "w") as f:
         f.write('{"version": 0}')
 
-    _v, _md, arrow_adds = DL.delta_snapshot_arrow(root)
+    _v, md, arrow_adds = DL.delta_snapshot_arrow(root)
     stats = [s for s in arrow_adds.column("stats").to_pylist() if s]
     assert len(stats) == 2
     for s in stats:
         mx = json.loads(s)["maxValues"]["ts"]
         assert "T" in mx, mx  # isoformat, never str(datetime)
-    pruned = DL._prune_adds_local(
-        arrow_adds, {"ts": ("2024-01-05T12:00:00+00:00", None)}, set()
+    pruned = DL._prune_adds(
+        None, md, arrow_adds,
+        TL._norm_where({"ts": ("2024-01-05T12:00:00+00:00", None)}),
     )
     kept = pruned.column("path").to_pylist()
     assert kept == ["b.parquet"]  # straddler kept, Jan-4 file pruned

@@ -17,6 +17,7 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StructField, StructType,
 )
 
+from django_datastream_spark import txnlog as TL
 from django_datastream_spark.sources import delta as DL
 
 SCHEMA = StructType(
@@ -57,6 +58,16 @@ def _meta(partitioned=True):
 
 
 _PROTO = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+
+
+def _kept(md, adds, where):
+    """Paths the shared keep test keeps (driver loop) for an Arrow
+    add set or a list of add dicts."""
+    if isinstance(adds, list):
+        adds = DL._adds_from_dicts(adds)
+    return DL._prune_adds(
+        None, md, adds, TL._norm_where(where)
+    ).column("path").to_pylist()
 
 
 def _add(path, pv=None):
@@ -342,15 +353,12 @@ def test_read_delta_where_prunes_and_stays_exact(spark, tmp_path):
     )
     # the pruning decision itself: file 0 provably out, others kept
     _v, md, live = DL.delta_snapshot(root)
-    keep = [
-        a["path"] for a in live
-        if DL._may_match(a.get("partitionValues") or {}, a.get("stats"),
-                 {"doc_id": (12, 25)}, set())
+    assert _kept(md, live, {"doc_id": (12, 25)}) == [
+        "f1.parquet", "f2.parquet"
     ]
-    assert keep == ["f1.parquet", "f2.parquet"]
     # open bounds + missing stats stay conservative
-    nostat = {"add": {"path": "x", "partitionValues": {}}}
-    assert DL._may_match({}, None, {"doc_id": (12, None)}, set())
+    nostat = {"path": "x", "partitionValues": {}}
+    assert _kept(md, [nostat], {"doc_id": (12, None)}) == ["x"]
     # result equals filtering a full read
     full = DL.read_delta(spark, root).filter(
         (F.col("doc_id") >= 12) & (F.col("doc_id") <= 25)
@@ -364,12 +372,7 @@ def test_read_delta_where_prunes_partitions(spark, tmp_path):
     root = str(tmp_path / "t")
     _build_hive_table(root)
     _v, md, live = DL.delta_snapshot(root)
-    keep = [
-        a["path"] for a in live
-        if DL._may_match(a.get("partitionValues") or {}, a.get("stats"),
-                 {"part": (1, 1)}, {"part"})
-    ]
-    assert keep == ["part=1/f3.parquet"]
+    assert _kept(md, live, {"part": (1, 1)}) == ["part=1/f3.parquet"]
     got = DL.read_delta(spark, root, where={"part": (1, 1)})
     assert sorted(r["doc_id"] for r in got.collect()) == [1, 3, 5, 7, 9]
 
@@ -742,13 +745,11 @@ def test_checkpoint_with_only_parsed_stats_still_skips(spark, tmp_path):
         [(i, 0) for i in even] + [(i, 1) for i in odd]
     )
     # data skipping actually prunes through the translated stats
-    _v, _md, arrow_adds = DL.delta_snapshot_arrow(root)
+    _v, md_r, arrow_adds = DL.delta_snapshot_arrow(root)
     assert arrow_adds.column("stats").null_count == 0
-    pruned = DL._prune_adds_local(arrow_adds, {"doc_id": (11, 15)}, {"part"})
-    assert pruned.num_rows == 1
+    assert len(_kept(md_r, arrow_adds, {"doc_id": (11, 15)})) == 1
     # and through the partition values
-    pruned2 = DL._prune_adds_local(arrow_adds, {"part": (1, 1)}, {"part"})
-    assert pruned2.num_rows == 1
+    assert len(_kept(md_r, arrow_adds, {"part": (1, 1)})) == 1
     got2 = sorted(
         r["doc_id"]
         for r in DL.read_delta(spark, root, where={"doc_id": (11, 15)})
@@ -812,6 +813,5 @@ def test_checkpoint_without_any_stats_reads_with_no_skip(spark, tmp_path):
         r["doc_id"] for r in DL.read_delta(spark, root).collect()
     ) == [1, 2, 3]
     # no stats: the prune keeps everything (conservative, not wrong)
-    _v, _md, arrow_adds = DL.delta_snapshot_arrow(root)
-    pruned = DL._prune_adds_local(arrow_adds, {"doc_id": (99, 100)}, set())
-    assert pruned.num_rows == 1
+    _v, md_r, arrow_adds = DL.delta_snapshot_arrow(root)
+    assert len(_kept(md_r, arrow_adds, {"doc_id": (99, 100)})) == 1

@@ -18,6 +18,7 @@ import struct
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from django_datastream_spark import txnlog as TL
 from django_datastream_spark.sources import avro_lite as AV
 from django_datastream_spark.sources import delta as DL
 from django_datastream_spark.sources import iceberg as IB
@@ -167,7 +168,7 @@ def test_delta_100k_adds_resolve_and_prune_distributed(spark, tmp_path):
     assert "real0.parquet" not in live and "real3.parquet" in live
     # the distributed prune keeps exactly the real files' ranges;
     # every synthetic survivor would make the scan raise (no file)
-    assert adds.num_rows >= DL.DISTRIBUTED_PRUNE_AT
+    assert adds.num_rows >= TL.DISTRIBUTED_PRUNE_AT
     got = DL.read_delta(spark, root, where={"doc_id": (12, 35)})
     # bounds are INCLUSIVE, the txn_read(where=) contract
     assert sorted(r["doc_id"] for r in got.collect()) == list(range(12, 36))

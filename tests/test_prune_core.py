@@ -16,7 +16,7 @@ import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as hst
 
 from django_datastream_spark import txnlog as TL
@@ -191,71 +191,62 @@ def _keeps(d: str, name: str, part: bool, enc: list, wn: dict):
     delta = [a["path"] in kept for _t, a, _i in enc]
     fields = {"c": (1, TYPES[name][3])}
     ice = [
-        TL._keep_file(
-            IB._iceberg_file_stats(i, fields), None, where_norm=wn
-        )
+        TL._keep_file(wn, IB._iceberg_file_stats(i, fields))
         for _t, _a, i in enc
     ]
     return {"txn": txn, "delta": delta, "iceberg": ice}
 
 
-def _old_keeps(name: str, part: bool, enc: list, wn: dict):
-    """The per-log evaluators this core replaced, on the same
-    metadata; an evaluator that raised counts as keeping the file
-    (the read failed rather than pruned). Delta and Iceberg took
-    ranges only: IN-lists are not compared there."""
-    b = wn["c"]
-
-    def txn_keep(rel, st_j):
-        stats = json.loads(st_j)
+def _exact_misses(log: str, name: str, part: bool, ms: bool, rows, b):
+    """True when ``log`` records exact metadata for this file and the
+    predicate provably misses it: the keep test must then prune."""
+    vals = [v for v in rows if v is not None]
+    if log == "iceberg" and not vals:
+        return False  # manifests written here carry no null counts
+    if log == "delta" and ms and not part and name in ("ts", "tstz"):
+        return False  # millisecond stats only bound the true max
+    if log == "txn" and part:
+        # a hive directory answers equality on str/int values only
+        if name not in ("int", "str"):
+            return False
         if isinstance(b, TL._In):
-            return any(
-                TL._file_may_match(stats, "c", v, v)
-                and TL._partition_may_match(rel, "c", v)
-                for v in b
-            )
-        lo, hi = b
-        return TL._file_may_match(stats, "c", lo, hi) and not (
-            lo is not None and lo == hi
-            and not TL._partition_may_match(rel, "c", lo)
-        )
-
-    def safe(fn, *a):
-        try:
-            return fn(*a)
-        except Exception:  # the old reader raised: nothing was pruned
-            return True
-
-    out = {"txn": [txn_keep(*t) for t, _a, _i in enc]}
+            eqs = list(b)
+        elif b[0] is not None and b[0] == b[1]:
+            eqs = [b[0]]
+        else:
+            return False
+        return all(x not in vals for x in eqs)
+    if not vals:
+        return True  # all NULL: no comparison matches
+    mn, mx = min(vals), max(vals)
     if isinstance(b, TL._In):
-        return out
-    fields = {"c": (1, TYPES[name][3])}
-    out["delta"] = [
-        safe(DL._may_match, a["partitionValues"], a.get("stats"),
-             {"c": b}, {"c"} if part else set())
-        for _t, a, _i in enc
-    ]
-    out["iceberg"] = [
-        safe(IB._entry_may_match, i, {"c": b}, fields)
-        for _t, _a, i in enc
-    ]
-    return out
+        return all(x < mn or x > mx for x in b)
+    lo, hi = b
+    return (lo is not None and mx < lo) or (hi is not None and mn > hi)
+
+
+_MS_MAX = dt.datetime(2024, 1, 1, 12, 0, 0, 1500)
 
 
 @settings(max_examples=400, deadline=None, derandomize=True)
 @given(cases())
-def test_shared_core_never_prunes_a_matching_file(case):
+# delta-spark's millisecond stats record this file's max as .001
+@example(("ts", False, [[_MS_MAX]], (_MS_MAX, None), True))
+@example(("tstz", False, [[_MS_MAX.replace(tzinfo=UTC)]],
+          _MS_MAX.replace(tzinfo=UTC), True))
+def test_shared_core_prunes_exactly_what_stats_rule_out(case):
+    """(a) no file holding a matching row is ever pruned, in any log;
+    (b) a file whose exact min/max (or partition value) misses the
+    predicate is pruned."""
     name, part, files, bound, ms = case
     wn = TL._norm_where({"c": bound})
     with tempfile.TemporaryDirectory() as d:
         enc = _encode(d, name, part, files, ms)
         keeps = _keeps(d, name, part, enc, wn)
-        old = _old_keeps(name, part, enc, wn)
-    truth = [any(_matches(v, wn["c"]) for v in rows) for rows in files]
     for log, kept in keeps.items():
-        for i, (k, t) in enumerate(zip(kept, truth)):
-            assert k or not t, (log, i, "pruned a file holding a match")
-            # the new keep set sits inside the old evaluator's, except
-            # where the old one pruned a file holding a match
-            if log in old:
-                assert old[log][i] or not k or t, (log, i, "kept more")
+        for i, (k, rows) in enumerate(zip(kept, files)):
+            match = any(_matches(v, wn["c"]) for v in rows)
+            assert k or not match, (log, i, "pruned a file holding a match")
+            assert not (
+                k and _exact_misses(log, name, part, ms, rows, wn["c"])
+            ), (log, i, "kept a file its exact metadata rules out")

@@ -62,10 +62,10 @@ def test_publish_hive_partitions_and_stats_skipping(spark, tmp_path):
     rows = sorted((r["doc_id"], r["p"]) for r in got.collect())
     assert rows == [(i, i % 2) for i in range(40)]
     # translated stats actually prune (every add carries them)
-    _v, _md, adds = DL.delta_snapshot_arrow(root)
+    _v, md, adds = DL.delta_snapshot_arrow(root)
     assert adds.column("stats").null_count == 0
-    pruned = DL._prune_adds_local(
-        adds, {"doc_id": (35, 39)}, {"p"}
+    pruned = DL._prune_adds(
+        None, md, adds, TL._norm_where({"doc_id": (35, 39)})
     )
     assert pruned.num_rows < adds.num_rows
     got2 = DL.read_delta(spark, root, where={"doc_id": (35, 39)})

@@ -11,9 +11,10 @@ adversarial pass over the write-seam + keyset-pagination diff).
    never an in-place truncate a concurrent reader could tear.
 4. delete_rel_files on a FileIO root prunes ONLY deleted files'
    ancestor dirs, never unrelated (possibly mid-write) empty dirs.
-5. _cmp_pair normalizes the temporal separator only when BOTH sides
-   are temporal-shaped — ordinary string-column stats never get
-   rewritten into a non-conservative prune.
+5. Temporal separators normalize only on temporal columns (the keep
+   test types Delta stats by the table schema) — ordinary
+   string-column stats never get rewritten into a non-conservative
+   prune.
 6. Cross-endpoint cursors fail as ValueError('malformed cursor'),
    not a KeyError.
 7. remove_orphan_files keeps "removed" = data files; swept staging
@@ -144,6 +145,25 @@ def test_delete_rel_files_spares_unrelated_empty_dirs(tmp_path):
 
 
 def test_cmp_pair_guard_only_when_both_temporal():
+    md = {
+        "schemaString": json.dumps({"type": "struct", "fields": [
+            {"name": "s", "type": "string", "nullable": True,
+             "metadata": {}},
+            {"name": "ts", "type": "timestamp", "nullable": True,
+             "metadata": {}},
+        ]}),
+        "partitionColumns": [],
+        "configuration": {},
+    }
+
+    def keeps(stats, where):
+        adds = DL._adds_from_dicts(
+            [{"path": "f", "partitionValues": {}, "stats": stats}]
+        )
+        return DL._prune_adds(
+            None, md, adds, TL._norm_where(where)
+        ).num_rows == 1
+
     # ordinary string column: max '2024-01-02A99' > lo '2024-01-02 10'
     # in true string order — the file must be KEPT (one-sided
     # normalization would have rewritten lo to 'T' form and pruned)
@@ -151,17 +171,13 @@ def test_cmp_pair_guard_only_when_both_temporal():
         "minValues": {"s": "2024-01-02A00"},
         "maxValues": {"s": "2024-01-02A99"},
     })
-    assert DL._may_match(
-        {}, stats, {"s": ("2024-01-02 10", None)}, set()
-    )
-    # both-temporal normalization still prunes correctly
+    assert keeps(stats, {"s": ("2024-01-02 10", None)})
+    # a timestamp column still prunes across separators
     stats_t = json.dumps({
         "minValues": {"ts": "2024-01-05 01:00:00"},
         "maxValues": {"ts": "2024-01-05 23:00:00"},
     })
-    assert not DL._may_match(
-        {}, stats_t, {"ts": ("2024-01-06T00:00:00", None)}, set()
-    )
+    assert not keeps(stats_t, {"ts": ("2024-01-06T00:00:00", None)})
 
 
 def test_orphan_counter_separates_staging(spark, tmp_path):

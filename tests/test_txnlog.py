@@ -2241,14 +2241,14 @@ def test_bloom_never_false_negative_across_types(spark, tmp_path):
             probes["f"] = int(row[3])
         for col, val in probes.items():
             hit = any(
-                TL._bloom_may_match(root, rel, col, val, val, cache)
+                TL._bloom_keeps(root, rel, col, val, val, cache)
                 for rel in m
             )
             assert hit, f"false negative: {col}={val!r}"
     # and a value never inserted is (overwhelmingly) pruned everywhere
     miss = sum(
         1 for rel in m
-        if not TL._bloom_may_match(
+        if not TL._bloom_keeps(
             root, rel, "v", 987_654_321, 987_654_321, cache
         )
     )

@@ -17,6 +17,8 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -145,9 +147,6 @@ def test_txn_read_100k_files_plans_without_driver_fold(
 
     # fabricate a 100k-row parquet checkpoint at head: the real rows
     # plus synthetic files whose k-range can never match the predicate
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     n_fake = 100_000 - len(real)
     fake_rels = [f"fake/part-{i:06d}.parquet" for i in range(n_fake)]
     fake_stats = [
@@ -217,6 +216,49 @@ def test_txn_read_100k_files_plans_without_driver_fold(
     }
     assert got == set(range(150, 251))
     assert calls["n"] == 0, "prune ran driver-side, not as a Spark job"
+
+    # the one threshold forces Delta's prune distributed too: two real
+    # files plus synthetic adds (no file behind them) whose stats
+    # exclude the predicate
+    from django_datastream_spark.sources import delta as DL
+
+    droot = str(tmp_path / "delta")
+    os.makedirs(droot)
+    adds = []
+    for i, (lo, hi) in enumerate([(0, 199), (200, 399)]):
+        pq.write_table(
+            pa.table({"k": pa.array(range(lo, hi + 1), pa.int64())}),
+            os.path.join(droot, f"real{i}.parquet"),
+        )
+        adds.append((f"real{i}.parquet", lo, hi))
+    adds += [(f"fake{i}.parquet", 10_000 + i, 10_000 + i) for i in range(2_000)]
+    DL.write_delta_commit(droot, 0, [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {
+            "id": "t", "format": {"provider": "parquet", "options": {}},
+            "schemaString": json.dumps({"type": "struct", "fields": [
+                {"name": "k", "type": "long", "nullable": True,
+                 "metadata": {}},
+            ]}),
+            "partitionColumns": [], "configuration": {},
+        }},
+    ] + [
+        {"add": {
+            "path": p, "partitionValues": {}, "size": 1,
+            "modificationTime": 0, "dataChange": True,
+            "stats": json.dumps({"numRecords": hi - lo + 1,
+                                 "minValues": {"k": lo},
+                                 "maxValues": {"k": hi}}),
+        }}
+        for p, lo, hi in adds
+    ])
+    got = {
+        r["k"]
+        for r in DL.read_delta(spark, droot, where={"k": (150, 250)})
+        .collect()
+    }
+    assert got == set(range(150, 251))
+    assert calls["n"] == 0, "Delta prune ran driver-side"
 
 
 def test_distributed_footer_stats_match_driver_loop(
