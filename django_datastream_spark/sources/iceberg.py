@@ -432,9 +432,10 @@ def iceberg_live_files(
     list IN) prunes files through the manifests' recorded lower/upper
     bounds (spec Appendix D single-value binary, decoded per the
     column's declared type) with the txn log's keep test —
-    conservative: missing/unmapped bounds keep the file. A snapshot carrying POSITION DELETES raises
-    here (the flat file list would resurrect deleted rows) — use
-    :func:`read_iceberg`, which applies them.
+    conservative: missing/unmapped bounds keep the file. A snapshot
+    carrying POSITION DELETES raises here (the flat file list would
+    resurrect deleted rows) — use :func:`read_iceberg`, which applies
+    them.
 
     Scale: manifests are independent, so past
     :data:`DISTRIBUTED_MANIFESTS_AT` of them (and given ``spark``)
@@ -526,11 +527,10 @@ def _iceberg_file_stats(df: dict, fields: dict) -> dict:
             TL._stat_value(_bound_value(m[fid], typ)) if fid in m else None
             for m in (lo_map, hi_map)
         )
-        if (mn or mx) and (mn or mx)[0] == (mx or mn)[0]:
+        tags = {s[0] for s in (mn, mx) if s is not None}
+        if len(tags) == 1:  # a writer may record only one side
             cols[name] = {
-                "t": (mn or mx)[0],
-                "min": mn[1] if mn else None,
-                "max": mx[1] if mx else None,
+                "t": tags.pop(), "min": mn and mn[1], "max": mx and mx[1]
             }
     return cols
 
