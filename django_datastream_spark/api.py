@@ -579,9 +579,9 @@ class Datastream:
         every stored version of the recomputed streams' points is
         dropped (partition-scoped rewrite,
         ``Tables.replace_points_derived``) and the backfill lands as
-        the only copy — the same statement a Delta/Iceberg MERGE with
-        NOT-MATCHED-BY-SOURCE DELETE expresses. ``replace`` requires
-        ``materialize`` and the single-writer quiescence vacuum needs."""
+        the only copy, in one snapshot-isolated overwrite commit — the
+        same statement a Delta/Iceberg MERGE with NOT-MATCHED-BY-SOURCE
+        DELETE expresses. ``replace`` requires ``materialize``."""
         if replace and not materialize:
             raise ValueError("replace=True requires materialize=True")
         streams = self.find_streams(query_tags)
@@ -1077,88 +1077,18 @@ class Datastream:
     def vacuum(self) -> None:
         """Physically drop datapoints of deleted streams and compact
         superseded metadata/derived-point versions (the deferred half of
-        S5). Every rewrite lands in a fresh snapshot directory and the
-        ``_CURRENT`` pointer is swapped atomically, so concurrent READERS
-        never observe a missing path (the previous generation is retained
-        for one more swap). WRITERS must be quiesced for the duration:
-        rows appended to a table's current version dir while its rewrite
-        runs would be silently dropped by the swap — stop streaming
-        ingest (or route appends elsewhere) before vacuuming, exactly
-        like VACUUM on Delta/Iceberg requires no concurrent blind
-        appends to the files it rewrites."""
+        S5). The streams registry is rewritten into a fresh snapshot
+        directory behind an atomic ``_CURRENT`` swap; the point tables
+        change by commits (deletion vectors for dead raw/aggregate rows,
+        one overwrite commit for derived points) and then reclaim every
+        file the latest snapshot no longer references — readers planned
+        against an OLDER snapshot lose those files, so run vacuum from a
+        maintenance window. Metadata WRITERS must be quiesced for the
+        registry swap: rows appended to the streams log while it runs
+        would be silently dropped."""
         t = self.tables
         t.compact_streams()
-        live = t.read_streams().select("stream_id")
-
-        if t.TXN_POINTS:
-            from . import txnlog as TL
-
-            if TL.is_txn_table(t.points_raw_path):
-                # dead-stream rows die by DELETION VECTORS (one commit,
-                # no partition rewrite); the id list is bounded by
-                # stream count — the same metadata scale as the
-                # streams table itself
-                dead = [
-                    r["stream_id"]
-                    for r in t.read_points_raw()
-                    .select("stream_id")
-                    .distinct()
-                    .join(live, "stream_id", "left_anti")
-                    .collect()
-                ]
-                if dead:
-                    TL.txn_delete(
-                        self.spark,
-                        t.points_raw_path,
-                        F.col("stream_id").isin(dead),
-                        writer="vacuum",
-                    )
-                TL.txn_vacuum(t.points_raw_path)
-        elif t._exists(t.points_raw_path):
-            df = t.read_points_raw().join(live, "stream_id", "left_semi")
-            t._swap_version(
-                "points_raw",
-                lambda d: df.write.partitionBy("p_date").parquet(d),
-            )
-        if t._exists(t.points_derived_path):
-            # compaction: keep only the winning version per (stream, ts)
-            dd = t.read_points_derived(latest_only=True).join(
-                live, "stream_id", "left_semi"
-            )
-            t._swap_version(
-                "points_derived",
-                lambda d: dd.withColumn("p_date", F.to_date("ts"))
-                .write.partitionBy("p_date")
-                .parquet(d),
-            )
-        if t.TXN_AGG:
-            from . import txnlog as TL
-
-            if TL.is_txn_table(t.points_agg_path):
-                dead = [
-                    r["stream_id"]
-                    for r in t.read_points_agg()
-                    .select("stream_id")
-                    .distinct()
-                    .join(live, "stream_id", "left_anti")
-                    .collect()
-                ]
-                if dead:
-                    TL.txn_delete(
-                        self.spark,
-                        t.points_agg_path,
-                        F.col("stream_id").isin(dead),
-                        writer="vacuum",
-                    )
-                TL.txn_vacuum(t.points_agg_path)
-        elif t._exists(t.points_agg_path):
-            agg = self.spark.read.parquet(t.points_agg_path).join(
-                live, "stream_id", "left_semi"
-            )
-            t._swap_version(
-                "points_agg",
-                lambda d: agg.write.partitionBy("granularity", "p_date").parquet(d),
-            )
+        t.vacuum_points(t.read_streams().select("stream_id"))
 
     # ------------------------------------------------------------------
     # downsampling (A14, §3.3) — hierarchical cascade

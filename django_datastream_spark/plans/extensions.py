@@ -7815,11 +7815,12 @@ def q181(spark, sf_dir):
 )
 def q182(spark, sf_dir):
     """The datastream ENGINE's hot table on the transactional layer,
-    inside the oracle gate (``Tables.TXN_POINTS``): hourly sums ingest
-    through ``append_multiple`` in two batches split at a fixed
-    mid-month instant — each batch lands as ONE log commit —
-    ``compact_points_raw`` becomes an OPTIMIZE commit (the split day
-    holds files from both batches, so compaction provably rewrites),
+    inside the oracle gate: hourly sums ingest through
+    ``append_multiple`` in two batches split at a fixed mid-month
+    instant — each batch lands as ONE log commit —
+    ``compact_points_raw`` is an OPTIMIZE commit returning the number
+    of files it rewrote (the split day holds files from both batches,
+    so compaction provably rewrites),
     and all three commit versions read back through the engine's
     ``read_table_at`` time travel.  Day-level rollups of every era
     must hash-match SQL that recomputes each era from the split
@@ -7830,7 +7831,7 @@ def q182(spark, sf_dir):
     era aggregation happens in the RETURNED plan (JVM-side), not at
     build time.  The engine-on-txn DOWNSAMPLE equivalence (conflicted
     tail-bucket upsert landing as one snapshot-isolated overwrite
-    commit, TXN_AGG) is pinned exactly in tests/test_txn_points.py —
+    commit) is pinned exactly in tests/test_txn_points.py —
     a full ingest→downsample→read cycle is ~40 driver-jobs and
     container job latency would put it far outside the per-query
     bench gate, so the gate carries the ops surface and pytest
@@ -7866,7 +7867,6 @@ def q182(spark, sf_dir):
     split = _dtm.datetime(2024, 1, 16, 12)
 
     engine = Datastream(spark, _os.path.join(base, "store"))
-    engine.tables.TXN_POINTS = True
     sid = engine.ensure_stream(
         {"title": "hourly-total"}, highest_granularity="hours"
     )

@@ -1,17 +1,15 @@
 """Physical table layout (SURVEY.md §1.3 / FIXTURES.md B1).
 
-Four tables under a root directory, each behind a tiny snapshot pointer
-(``_CURRENT`` names the live ``v=<n>/`` data directory — a poor man's
-Iceberg snapshot, so full-table rewrites such as vacuum/compaction are
-atomic for concurrent readers):
+Four tables under a root directory:
 
 - ``streams``        — metadata, stored as an APPEND-ONLY LOG of row
-                       versions (``_v`` monotone, ``_deleted`` tombstone).
-                       Reads resolve the latest version per stream_id —
-                       MERGE semantics without ever collecting or
-                       rewriting the table on the driver. Compaction
-                       (vacuum) snapshots the live rows into a new
-                       version dir and swaps the pointer.
+                       versions (``_v`` monotone, ``_deleted`` tombstone)
+                       behind a tiny snapshot pointer (``_CURRENT`` names
+                       the live ``v=<n>/`` dir). Reads resolve the latest
+                       version per stream_id — MERGE semantics without
+                       ever collecting or rewriting the table on the
+                       driver. Compaction snapshots the live rows into a
+                       new version dir and swaps the pointer.
 - ``points_raw``     — appends at each stream's highest granularity,
                        partitioned by ``p_date`` (UTC day of ts) so range
                        scans prune partitions.
@@ -23,10 +21,18 @@ atomic for concurrent readers):
                        superseded versions away.
 - ``points_agg``     — downsampled buckets for all coarser granularities,
                        partitioned by ``(granularity, p_date)``; upserts
-                       (recomputed boundary buckets) rewrite only the
-                       affected partitions via dynamic partition
-                       overwrite. On Delta/Iceberg both upsert paths
-                       become a plain MERGE — the layout is identical.
+                       that replace existing buckets rebuild only the
+                       affected partitions.
+
+The three POINT tables live on the transactional commit log
+(:mod:`.txnlog`, one log per table under ``<root>/<table>_txn``):
+every append is an ACID, auto-rebasing commit; a partition rebuild
+(conflicted aggregate upsert, derived backfill with ``replace=True``,
+vacuum's derived compaction) is ONE snapshot-isolated ``overwrite``
+commit; compaction is ``txn_optimize``; dead-stream rows die by
+deletion vectors; and time travel runs over commit versions. Readers
+keep the snapshot they planned against until ``txn_vacuum`` reclaims
+superseded files.
 
 All aggregate columns are *algebraic carriers* (sum, count, sum_squares,
 t_sum_epoch, frequencies) plus their finished presentation values, so a
@@ -34,29 +40,26 @@ coarser granularity can be computed by merging the next-finer aggregates
 without rescanning raw data — the property that makes the downsample
 cascade O(raw + Σ aggregates) instead of O(6 × raw) at 100 TB.
 
-STORAGE-REACH BOUNDARY (deliberate, round 11): the external lakehouse
-tier AND the engine's txn tier are FileIO-seam-routed — they run on
-object-store roots with no POSIX path (sources/fileio.py, txnlog's
-``_root``/``_store``). THIS module — the Datastream STORE root itself
-(the ``_CURRENT`` pointer swap via ``os.replace``, the flock'd
-external-catalog RMW) — remains POSIX-rooted: its pointer swap and
-file lock have no object-store equivalent without a coordinator. A
-deployment that wants the engine on S3 runs ``SPARK_GRAFT_TXN=1`` —
-the POINTS/AGGREGATE data tables then ride the txn tier, whose commit
-CAS is object-store-capable — leaving only the streams registry,
-pointer files and catalog POSIX-resident (pure metadata, kB-scale:
-mount or local disk both serve it). Documented here so the boundary
-is a stated contract, not an accident of ``os.`` calls.
+STORAGE-REACH BOUNDARY: the commit log is FileIO-seam-routed and its
+commit CAS is object-store-capable (txnlog's ``_root``/``_store``), so
+the point tables can sit on an object store. The streams registry
+(its ``_CURRENT`` pointer swap via ``os.replace``) and the flock'd
+external-catalog RMW remain POSIX-rooted — pure metadata, kB-scale:
+a mount or local disk serves it. Documented here so the boundary is
+a stated contract, not an accident of ``os.`` calls.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import txnlog as TL
 
 
 def local_rows_df(spark: SparkSession, data, schema) -> DataFrame:
@@ -213,23 +216,30 @@ POINTS_AGG_SCHEMA = T.StructType(
     ]
 )
 
-_PART_MARKERS = ("p_date=", "granularity=")
+#: points_raw as read back: the stored columns plus the p_date partition
+_RAW_READ_SCHEMA = T.StructType(
+    list(POINTS_RAW_SCHEMA.fields) + [T.StructField("p_date", T.DateType())]
+)
+
+#: the point tables (each on its own commit log) -> partition columns
+_POINT_TABLES = {
+    "points_raw": ["p_date"],
+    "points_derived": ["p_date"],
+    "points_agg": ["granularity", "p_date"],
+}
 
 
 class Tables:
     """Parquet-backed storage for one engine instance.
 
-    Single streaming writer per store (SURVEY T5 note). Readers are safe
-    concurrently with the SNAPSHOT-SWAPPING writers (vacuum, compaction:
-    new generation written, pointer flipped, old files retained) — but
-    NOT, by default, with upsert_points_agg, which rewrites conflicted
-    (granularity, p_date) partitions in place via dynamic partition
-    overwrite: a reader holding a pre-upsert plan over those partitions
-    can hit missing files. Same single-writer quiescence rule as
-    vacuum. Set ``AGG_UPSERT_SNAPSHOT = True`` to route conflicted agg
-    upserts through the snapshot-swap path too (reader-safe, at
-    O(partition dirs) link metadata per upsert); a table format
-    (Delta/Iceberg MERGE) removes the trade wholesale.
+    The point tables are commit-log tables: writers of any number
+    commit concurrently (appends rebase, conflicting rewrites raise
+    ``txnlog.CommitConflictError``) and readers are snapshot-isolated.
+    The one single-writer rule left is the streams registry's
+    compaction (``compact_streams``, run by vacuum and implicitly by
+    upserts while ``auto_compact_streams`` is on): its pointer swap
+    captures the log as THIS process sees it, so metadata writers must
+    be quiesced while it runs.
     """
 
     #: auto-compact the streams version log once it exceeds this many
@@ -242,60 +252,35 @@ class Tables:
     #: multi-writer metadata deployments and compact from one owner
     auto_compact_streams = True
 
-    #: reader-safe aggregate upserts: when True, a CONFLICTED
-    #: upsert_points_agg (one that must replace existing buckets)
-    #: writes the rebuilt partitions into a fresh snapshot generation —
-    #: untouched partitions HARDLINKED, conflicted ones rewritten — and
-    #: atomically swaps the ``_CURRENT`` pointer, so a reader holding a
-    #: pre-upsert plan never loses a file mid-job (the same guarantee
-    #: vacuum/compaction already give). Costs O(total partition dirs)
-    #: link metadata per conflicted upsert, so it's OFF by default for
-    #: the per-micro-batch auto_downsample hot path (where the
-    #: documented single-writer/reader-quiescence rule applies) and ON
-    #: for deployments with long-running concurrent readers. Fresh-only
-    #: upserts are plain appends either way (appends never break a
-    #: running reader). Delta/Iceberg make this flag moot.
-    AGG_UPSERT_SNAPSHOT = False
-
-    #: snapshot generations retained per table (current + priors).
-    #: 2 (default) preserves today's reader-safety guarantee; raise it
-    #: to keep a deeper time-travel history at rewrite-size disk cost
-    #: per generation (snapshots share nothing — this is the honest
-    #: local-parquet trade; Delta/Iceberg share unchanged files)
+    #: streams-registry snapshot generations retained (current + priors).
+    #: 2 (default) keeps readers planned against the previous generation
+    #: safe; raise it to keep a deeper streams time-travel history
     SNAPSHOT_RETAIN = 2
-
-    #: OPT-IN: route ``points_raw`` — the engine's hottest table —
-    #: through the transactional commit log (:mod:`.txnlog`) instead
-    #: of versioned snapshot dirs. Appends become ACID commits
-    #: (multi-writer safe, auto-rebasing), compaction becomes
-    #: ``txn_optimize`` (commutes with concurrent appends), dead-rows
-    #: cleanup becomes deletion vectors, and time travel runs over
-    #: the commit log (every version, not SNAPSHOT_RETAIN
-    #: generations). Default OFF: the plain-parquet path keeps its
-    #: documented single-writer contract and zero extra metadata.
-    #: ``SPARK_GRAFT_TXN=1`` in the environment flips BOTH txn flags
-    #: process-wide (the measured-decision switch — see
-    #: BENCH_NOTES.md "engine-on-txn" for the recorded trade-off).
-    TXN_POINTS = os.environ.get("SPARK_GRAFT_TXN", "") == "1"
-
-    #: OPT-IN: route ``points_agg`` through the commit log too. The
-    #: headline win is the conflicted aggregate upsert: instead of
-    #: dynamic partition overwrite (reader-unsafe, the documented
-    #: quiescence rule) or AGG_UPSERT_SNAPSHOT (O(partition dirs)
-    #: links), it becomes ONE snapshot-isolated ``overwrite`` commit —
-    #: readers keep the files of the snapshot they planned against,
-    #: and a racing writer loses the CAS and retries. Makes both
-    #: legacy trade-offs moot, exactly as the AGG_UPSERT_SNAPSHOT
-    #: docstring predicted a table format would.
-    TXN_AGG = os.environ.get("SPARK_GRAFT_TXN", "") == "1"
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
         self._v_counter = 0
+        # a store written by the retired plain-parquet layout would
+        # otherwise read as EMPTY: refuse it loudly instead
+        for table in _POINT_TABLES:
+            plain = os.path.join(root, table)
+            if (
+                os.path.isdir(plain)
+                and any(
+                    n == "_CURRENT" or n.startswith("v=")
+                    for n in os.listdir(plain)
+                )
+                and not TL.is_txn_table(self._point_root(table))
+            ):
+                raise ValueError(
+                    f"{plain} holds a plain versioned-parquet table; "
+                    f"point tables are read only from their commit log "
+                    f"({self._point_root(table)}) — re-ingest it"
+                )
 
-    # -- snapshot pointer ----------------------------------------------------
+    # -- snapshot pointer (streams registry) ---------------------------------
     def _current_version(self, table: str) -> int:
         ptr = os.path.join(self.root, table, "_CURRENT")
         try:
@@ -342,21 +327,13 @@ class Tables:
 
     # -- time travel ---------------------------------------------------------
     def snapshot_versions(self, table: str) -> list[int]:
-        """Retained snapshot versions for ``table``, oldest first. A
-        new version is cut at every rewrite boundary (compaction,
-        aggregate upsert, log compaction); plain appends accrete into
-        the current snapshot — so time travel is at rewrite
-        granularity, like any snapshot-pointer table format.  Under
-        ``TXN_POINTS`` / ``TXN_AGG``, ``points_raw`` / ``points_agg``
-        versions are COMMIT versions — every append/optimize/delete
-        or upsert is time-travelable until vacuum."""
-        troot = self._txn_root_of(table)
-        if troot is not None:
-            from . import txnlog as TL
-
-            if not TL.is_txn_table(troot):
-                return []
-            return list(range(1, TL.latest_version(troot) + 1))
+        """Readable versions of ``table``, oldest first. For a point
+        table these are COMMIT versions — every append, upsert,
+        optimize or delete — minus those whose files ``vacuum`` has
+        reclaimed. For the streams registry a version is cut at each
+        log compaction and ``SNAPSHOT_RETAIN`` generations are kept."""
+        if table in _POINT_TABLES:
+            return TL.readable_versions(self._point_root(table))
         tdir = os.path.join(self.root, table)
         if not os.path.isdir(tdir):
             return []
@@ -370,57 +347,43 @@ class Tables:
         return sorted(out)
 
     def read_table_at(self, table: str, version: int) -> DataFrame:
-        """Read a retained snapshot of ``table`` as-of ``version``
-        (raw stored rows — for the streams table that is the metadata
-        log state at that snapshot). Raises ``ValueError`` if the
-        version was never cut or was vacuumed by retention."""
-        troot = self._txn_root_of(table)
-        if troot is not None:
-            from . import txnlog as TL
-
-            if version not in self.snapshot_versions(table):
-                raise ValueError(f"{table} commit v{version} not in log")
-            return TL.txn_read(self.spark, troot, version=version)
-        if version not in self.snapshot_versions(table):
+        """Read ``table`` as-of ``version`` (raw stored rows — for the
+        streams table that is the metadata log state at that snapshot).
+        Raises ``ValueError`` if the version was never cut or was
+        reclaimed by vacuum / retention."""
+        have = self.snapshot_versions(table)
+        if version not in have:
             raise ValueError(
-                f"{table} v={version} not retained "
-                f"(have {self.snapshot_versions(table)}; "
-                f"raise SNAPSHOT_RETAIN to keep deeper history)"
+                f"{table} v{version} not in log (readable: {have})"
+            )
+        if table in _POINT_TABLES:
+            return TL.txn_read(
+                self.spark, self._point_root(table), version=version
             )
         return self.spark.read.parquet(
             os.path.join(self.root, table, f"v={version}")
         )
 
-    def _txn_root_of(self, table: str) -> str | None:
-        """The commit-log root of a txn-backed ``table``, else None."""
-        if table == "points_raw" and self.TXN_POINTS:
-            return self.points_raw_path
-        if table == "points_agg" and self.TXN_AGG:
-            return self.points_agg_path
-        return None
+    # -- paths ---------------------------------------------------------------
+    def _point_root(self, table: str) -> str:
+        # a commit-log table's root is FIXED: versioning lives in the log
+        return os.path.join(self.root, f"{table}_txn")
 
-    # -- paths (current snapshot) --------------------------------------------
     @property
     def streams_path(self) -> str:
         return self._data_dir("streams")
 
     @property
     def points_raw_path(self) -> str:
-        if self.TXN_POINTS:
-            # a txn table's root is FIXED: versioning lives in the
-            # commit log, not in v=<n> snapshot dirs
-            return os.path.join(self.root, "points_raw_txn")
-        return self._data_dir("points_raw")
+        return self._point_root("points_raw")
 
     @property
     def points_derived_path(self) -> str:
-        return self._data_dir("points_derived")
+        return self._point_root("points_derived")
 
     @property
     def points_agg_path(self) -> str:
-        if self.TXN_AGG:
-            return os.path.join(self.root, "points_agg_txn")
-        return self._data_dir("points_agg")
+        return self._point_root("points_agg")
 
     # -- external-table catalog (lakehouse interop by NAME) -----------
     @property
@@ -465,48 +428,6 @@ class Tables:
             finally:
                 fcntl.flock(lf, fcntl.LOCK_UN)
 
-    def _exists(self, path: str) -> bool:
-        return os.path.isdir(path) and any(
-            n.endswith(".parquet") or n.startswith(_PART_MARKERS)
-            for n in os.listdir(path)
-        )
-
-    def _migrate_plain_to_txn(self, table: str, txn_root: str) -> None:
-        """Zero-copy upgrade for the SPARK_GRAFT_TXN=1 flip over an
-        EXISTING plain store: hard-link the plain table's current
-        snapshot files into the txn root (partition dirs preserved)
-        and adopt them as commit 1, so the first txn-mode READ sees
-        the full history instead of an empty fresh table.  Idempotent
-        (no-op once the txn log exists) and metadata-only — bytes are
-        shared inodes; the plain snapshot dirs stay untouched as the
-        rollback path (flip the flag back).  Runs under the plain
-        path's documented single-writer quiescence rule, like every
-        generation swap."""
-        from . import txnlog as TL
-
-        if TL.is_txn_table(txn_root):
-            return
-        plain = self._data_dir(table)
-        if not self._exists(plain):
-            return
-        import shutil
-
-        for dirpath, _dirs, files in os.walk(plain):
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, fn)
-                rel = os.path.relpath(src, plain)
-                dst = os.path.join(txn_root, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                try:
-                    os.link(src, dst)
-                except FileExistsError:
-                    pass  # idempotent re-entry after a partial link pass
-                except OSError:
-                    shutil.copy2(src, dst)  # cross-device fallback
-        TL.init_table(txn_root)  # adopts the linked files as commit 1
-
     def _next_v(self) -> int:
         self._v_counter = max(self._v_counter + 1, time.time_ns())
         return self._v_counter
@@ -519,9 +440,13 @@ class Tables:
 
     # -- streams metadata (MERGE-style log) ----------------------------------
     def read_streams_log(self) -> DataFrame:
-        if not self._exists(self.streams_path):
+        path = self.streams_path
+        if not (
+            os.path.isdir(path)
+            and any(n.endswith(".parquet") for n in os.listdir(path))
+        ):
             return local_rows_df(self.spark, [], STREAMS_LOG_SCHEMA)
-        return self.spark.read.schema(STREAMS_LOG_SCHEMA).parquet(self.streams_path)
+        return self.spark.read.schema(STREAMS_LOG_SCHEMA).parquet(path)
 
     def read_streams(self) -> DataFrame:
         """Live stream rows: latest version per stream_id, tombstones out."""
@@ -614,124 +539,111 @@ class Tables:
 
         self._swap_version("streams", write)
 
+    # -- point tables (commit log) ---------------------------------------------
+    def _read_points(
+        self, table: str, schema: T.StructType, version: int | None = None
+    ) -> DataFrame:
+        """A point table's snapshot at ``version`` (default latest) as
+        ``schema``'s columns; an empty local frame before its first
+        commit."""
+        root = self._point_root(table)
+        if not TL.is_txn_table(root):
+            return local_rows_df(self.spark, [], schema)
+        return TL.txn_read(self.spark, root, version=version).select(
+            *schema.fieldNames()
+        )
+
+    def _append_points(self, table: str, df: DataFrame, writer: str) -> None:
+        TL.txn_append(
+            self.spark,
+            df,
+            self._point_root(table),
+            _POINT_TABLES[table],
+            writer=writer,
+        )
+
+    def _rewrite_partitions(
+        self,
+        table: str,
+        base_ver: int,
+        committed: set[str],
+        rows: DataFrame,
+        touched: list | None,
+        writer: str,
+    ) -> None:
+        """Land ``rows`` as the complete new content of the ``touched``
+        partitions (rows carrying the partition columns; None = every
+        partition) in ONE snapshot-isolated ``overwrite`` commit
+        against ``base_ver``: the partitions' ``committed`` files are
+        removed and ``rows`` — which may also hold rows for other
+        partitions — staged once. A touched partition ``rows`` leaves
+        empty is vacated. Readers keep the snapshot they planned
+        against (superseded files stay until ``txn_vacuum``); a rival
+        commit in the same partitions since ``base_ver`` makes this
+        raise ``txnlog.CommitConflictError`` and the caller re-runs."""
+        root = self._point_root(table)
+        parts = _POINT_TABLES[table]
+        if touched is None:
+            removes = sorted(committed)
+        else:
+            dirs = {
+                os.path.join(*(f"{c}={r[c]}" for c in parts)) for r in touched
+            }
+            removes = sorted(
+                f for f in committed if os.path.dirname(f) in dirs
+            )
+        adds = TL.stage_files(
+            self.spark, rows, root, parts, uuid.uuid4().hex[:12]
+        )
+        TL.commit(
+            root,
+            adds,
+            removes,
+            "overwrite",
+            [],
+            base_version=base_ver,
+            writer=writer,
+            stats=TL.collect_file_stats(root, adds, spark=self.spark),
+        )
+
+    def _snapshot(self, table: str) -> tuple[int, set[str]]:
+        root = self._point_root(table)
+        return TL.snapshot(root) if TL.is_txn_table(root) else (0, set())
+
     # -- raw points ------------------------------------------------------------
     def read_points_raw(self) -> DataFrame:
-        if self.TXN_POINTS:
-            from . import txnlog as TL
-
-            self._migrate_plain_to_txn("points_raw", self.points_raw_path)
-            if not TL.is_txn_table(self.points_raw_path):
-                return self.spark.createDataFrame(
-                    [], POINTS_RAW_SCHEMA
-                ).withColumn("p_date", F.to_date("ts"))
-            return TL.txn_read(self.spark, self.points_raw_path)
-        if not self._exists(self.points_raw_path):
-            return local_rows_df(self.spark, [], POINTS_RAW_SCHEMA).withColumn(
-                "p_date", F.to_date("ts")
-            )
-        return self.spark.read.parquet(self.points_raw_path)
+        return self._read_points("points_raw", _RAW_READ_SCHEMA)
 
     def append_points_raw(self, df: DataFrame) -> None:
-        if self.TXN_POINTS:
-            from . import txnlog as TL
-
-            self._migrate_plain_to_txn("points_raw", self.points_raw_path)
-            TL.txn_append(
-                self.spark,
-                df.withColumn("p_date", F.to_date("ts")),
-                self.points_raw_path,
-                ["p_date"],
-                writer="ingest",
-            )
-            return
-        (
-            df.withColumn("p_date", F.to_date("ts"))
-            .write.mode("append")
-            .partitionBy("p_date")
-            .parquet(self.points_raw_path)
+        self._append_points(
+            "points_raw", df.withColumn("p_date", F.to_date("ts")), "ingest"
         )
 
     def compact_points_raw(
-        self,
-        max_files_per_partition: int = 8,
-        target_file_bytes: int = 128 * 1024 * 1024,
+        self, target_file_bytes: int = 128 * 1024 * 1024
     ) -> int:
-        """OPTIMIZE-style small-file compaction: rewrite only the p_date
-        partitions holding more than ``max_files_per_partition`` parquet
-        files (continuous ingest appends one file per micro-batch per
-        partition), sized at ~``target_file_bytes`` apiece. Untouched
-        partitions are HARDLINKED into the fresh snapshot dir, so the cost
-        is O(compacted bytes) + O(total files) metadata, and the atomic
-        ``_CURRENT`` swap keeps concurrent readers safe (one retained
-        generation). Writer must be quiesced, as with vacuum. On
-        Delta/Iceberg this is OPTIMIZE / rewrite_data_files. Returns the
-        number of partitions compacted."""
-        src = self.points_raw_path
-        if self.TXN_POINTS:
-            from . import txnlog as TL
-
-            self._migrate_plain_to_txn("points_raw", src)
-            if not TL.is_txn_table(src):
-                return 0
-            # txn path: OPTIMIZE commit — commutes with concurrent
-            # appends (no quiescence needed), superseded files stay
-            # for snapshot readers until txn_vacuum
-            res = TL.txn_optimize(
-                self.spark, src, target_file_bytes=target_file_bytes
-            )
-            return int(res.get("rewritten_files") or 0)
-        if not self._exists(src):
+        """OPTIMIZE-style small-file compaction as one ``optimize``
+        commit (``txnlog.txn_optimize``): files under
+        ``target_file_bytes`` are rewritten per p_date partition at
+        ~``target_file_bytes`` apiece. Commutes with concurrent
+        appends; superseded files stay for snapshot readers until
+        vacuum. Returns the number of files rewritten."""
+        root = self.points_raw_path
+        if not TL.is_txn_table(root):
             return 0
-        parts: dict[str, list[str]] = {}
-        for name in os.listdir(src):
-            d = os.path.join(src, name)
-            if name.startswith("p_date=") and os.path.isdir(d):
-                parts[name] = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        targets = {
-            name: files
-            for name, files in parts.items()
-            if len(files) > max_files_per_partition
-        }
-        if not targets:
-            return 0
-
-        def write(new_dir: str) -> None:
-            os.makedirs(new_dir, exist_ok=True)
-            for name, files in parts.items():
-                if name in targets:
-                    d = os.path.join(src, name)
-                    nbytes = sum(os.path.getsize(os.path.join(d, f)) for f in files)
-                    n_out = max(1, -(-nbytes // target_file_bytes))
-                    (
-                        self.spark.read.parquet(d)
-                        .coalesce(int(n_out))
-                        .write.mode("overwrite")
-                        .parquet(os.path.join(new_dir, name))
-                    )
-                else:
-                    dst = os.path.join(new_dir, name)
-                    os.makedirs(dst, exist_ok=True)
-                    for f in parts[name]:
-                        os.link(os.path.join(src, name, f), os.path.join(dst, f))
-
-        self._swap_version("points_raw", write)
-        return len(targets)
+        res = TL.txn_optimize(
+            self.spark, root, target_file_bytes=target_file_bytes
+        )
+        return int(res.get("rewritten_files") or 0)
 
     # -- derived points (versioned by seq) --------------------------------------
     def read_points_derived(self, latest_only: bool = True) -> DataFrame:
-        if not self._exists(self.points_derived_path):
-            df = local_rows_df(self.spark, [], POINTS_DERIVED_SCHEMA)
-        else:
-            df = self.spark.read.parquet(self.points_derived_path).select(
-                *[f.name for f in POINTS_DERIVED_SCHEMA.fields]
-            )
-        if not latest_only:
-            return df
-        w = Window.partitionBy("stream_id", "ts").orderBy(F.col("seq").desc())
-        return (
-            df.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .drop("_rk")
+        df = self._read_points("points_derived", POINTS_DERIVED_SCHEMA)
+        return _latest_seq(df) if latest_only else df
+
+    def append_points_derived(self, df: DataFrame) -> None:
+        self._append_points(
+            "points_derived", _stored(df, POINTS_DERIVED_SCHEMA, "ts"), "derive"
         )
 
     def replace_points_derived(
@@ -742,28 +654,25 @@ class Tables:
         the only copy — the repair for ghost rows that latest-seq-wins
         cannot remove (a recompute that no longer emits a formerly
         materialized (stream_id, ts) key; see
-        api.backprocess_streams). Partition-scoped like
-        upsert_points_agg: only p_date partitions where the target
-        streams have old or new rows are read-modified-overwritten
-        (other streams' rows kept verbatim); untouched partitions are
-        never rewritten. Same single-writer quiescence rule as vacuum;
-        on Delta/Iceberg this is one MERGE with
-        NOT-MATCHED-BY-SOURCE DELETE."""
-        df = (
-            df.select(*[f.name for f in POINTS_DERIVED_SCHEMA.fields])
-            .withColumn("p_date", F.to_date("ts"))
-            .localCheckpoint(eager=True)  # bounded by the backfill
+        api.backprocess_streams). Partition-scoped: only p_date
+        partitions where the target streams have old or new rows are
+        rebuilt (other streams' rows kept verbatim), in one overwrite
+        commit."""
+        df = _stored(df, POINTS_DERIVED_SCHEMA, "ts").localCheckpoint(
+            eager=True  # bounded by the backfill
         )
-        path = self.points_derived_path
-        if not self._exists(path):
-            df.write.mode("append").partitionBy("p_date").parquet(path)
+        base_ver, committed = self._snapshot("points_derived")
+        if not committed:
+            self.append_points_derived(df)
             return
         sid_df = F.broadcast(
             local_rows_df(
                 self.spark, [(s,) for s in stream_ids], "stream_id string"
             )
         )
-        existing = self.spark.read.parquet(path).select(df.columns)
+        existing = TL.txn_read(
+            self.spark, self.points_derived_path, version=base_ver
+        ).select(df.columns)
         touched = (
             existing.join(sid_df, "stream_id", "left_semi")
             .select("p_date")
@@ -781,266 +690,147 @@ class Tables:
         keep = existing.join(tdf, "p_date", "left_semi").join(
             sid_df, "stream_id", "left_anti"
         )
-        out = keep.unionByName(df).localCheckpoint(eager=True)
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(mode_key, "static")
-        self.spark.conf.set(mode_key, "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("p_date").parquet(path)
-        finally:
-            self.spark.conf.set(mode_key, prev)
-        # dynamic overwrite cannot VACATE a partition: a touched p_date
-        # whose every row belonged to the replaced streams gets nothing
-        # written, so its stale files need explicit removal
-        import shutil
-
-        written = {
-            str(r["p_date"])
-            for r in out.select("p_date").distinct().collect()
-        }
-        for r in touched:
-            p = str(r["p_date"])
-            if p not in written:
-                shutil.rmtree(
-                    os.path.join(path, f"p_date={p}"), ignore_errors=True
-                )
-
-    def append_points_derived(self, df: DataFrame) -> None:
-        (
-            df.select(*[f.name for f in POINTS_DERIVED_SCHEMA.fields])
-            .withColumn("p_date", F.to_date("ts"))
-            .write.mode("append")
-            .partitionBy("p_date")
-            .parquet(self.points_derived_path)
+        self._rewrite_partitions(
+            "points_derived",
+            base_ver,
+            committed,
+            keep.unionByName(df),
+            touched,
+            "derive_replace",
         )
 
     # -- aggregates --------------------------------------------------------------
     def read_points_agg(self) -> DataFrame:
-        if self.TXN_AGG:
-            from . import txnlog as TL
+        return self._read_points("points_agg", POINTS_AGG_SCHEMA)
 
-            self._migrate_plain_to_txn("points_agg", self.points_agg_path)
-            if not TL.is_txn_table(self.points_agg_path):
-                return local_rows_df(self.spark, [], POINTS_AGG_SCHEMA)
-            return TL.txn_read(self.spark, self.points_agg_path).select(
-                *[f.name for f in POINTS_AGG_SCHEMA.fields]
-            )
-        if not self._exists(self.points_agg_path):
-            return local_rows_df(self.spark, [], POINTS_AGG_SCHEMA)
-        return self.spark.read.parquet(self.points_agg_path).select(
-            *[f.name for f in POINTS_AGG_SCHEMA.fields]
+    def append_points_agg(self, df: DataFrame) -> None:
+        self._append_points(
+            "points_agg", _stored(df, POINTS_AGG_SCHEMA, "bucket_ts"), "agg"
         )
 
     def upsert_points_agg(self, df: DataFrame) -> None:
-        """Upsert on (stream_id, granularity, bucket_ts), rewriting only
-        the (granularity, p_date) partitions that actually REPLACE an
-        existing bucket:
+        """Upsert on (stream_id, granularity, bucket_ts):
 
         1. the incoming batch is pinned (localCheckpoint — bounded by the
            batch, not by partition contents),
         2. touched partitions are probed for key collisions (one semi-join
            over the partition-pruned scan; the collided partition LIST is
            collected — metadata bounded by touched-partition count),
-        3. conflicted partitions get read-modify-overwrite via dynamic
-           partition overwrite; all remaining new rows are a plain APPEND
-           (zero read-back, zero rewrite).
+        3. no collision: the batch is a blind append commit; otherwise the
+           conflicted (granularity, p_date) partitions are rebuilt and
+           land together with the batch's fresh rows as ONE
+           snapshot-isolated ``overwrite`` commit.
 
         Under steady auto_downsample most batches only append fresh
         buckets + recompute the watermark-tail bucket, so per-batch
         rewrite volume is the conflicted tail partitions, not every
-        partition the batch touches. Delta/Iceberg MERGE in production;
-        same touched volume."""
-        df = (
-            df.select(*[f.name for f in POINTS_AGG_SCHEMA.fields])
-            .withColumn("p_date", F.to_date("bucket_ts"))
-            .localCheckpoint(eager=True)
+        partition the batch touches."""
+        df = _stored(df, POINTS_AGG_SCHEMA, "bucket_ts").localCheckpoint(
+            eager=True
         )
-        path = self.points_agg_path
+        base_ver, committed = self._snapshot("points_agg")
+        if not committed:
+            self.append_points_agg(df)
+            return
+        parts = _POINT_TABLES["points_agg"]
         key = ["stream_id", "granularity", "bucket_ts"]
-        if self.TXN_AGG:
-            self._migrate_plain_to_txn("points_agg", self.points_agg_path)
-            self._txn_upsert_points_agg(df, key)
-            return
-        if not self._exists(path):
-            df.write.mode("append").partitionBy("granularity", "p_date").parquet(path)
-            return
-        existing = self.spark.read.parquet(path).select(df.columns)
-        touched = df.select("granularity", "p_date").distinct()
-        conflicts = (
-            existing.join(F.broadcast(touched), ["granularity", "p_date"], "left_semi")
-            .join(F.broadcast(df.select(*key)), key, "left_semi")
-            .select("granularity", "p_date")
-            .distinct()
-            .collect()  # metadata: bounded by touched-partition count
-        )
-        new_rows = df
-        if conflicts:
-            cdf = local_rows_df(
-                self.spark,
-                [(r["granularity"], r["p_date"]) for r in conflicts],
-                "granularity string, p_date date",
-            )
-            keep = (
-                existing.join(F.broadcast(cdf), ["granularity", "p_date"], "left_semi")
-                .join(df.select(*key), key, "left_anti")
-            )
-            out = keep.unionByName(
-                df.join(F.broadcast(cdf), ["granularity", "p_date"], "left_semi")
-            )
-            # cut lineage from the path being overwritten (bounded: only
-            # the conflicted watermark-tail partitions)
-            out = out.localCheckpoint(eager=True)
-            if self.AGG_UPSERT_SNAPSHOT:
-                # reader-safe path: everything (rebuilt conflicted
-                # partitions + fresh rows) lands in a new snapshot
-                # generation, swapped atomically
-                self._agg_upsert_snapshot(df, conflicts, out)
-                return
-            mode_key = "spark.sql.sources.partitionOverwriteMode"
-            prev = self.spark.conf.get(mode_key, "static")
-            self.spark.conf.set(mode_key, "dynamic")
-            try:
-                out.write.mode("overwrite").partitionBy(
-                    "granularity", "p_date"
-                ).parquet(path)
-            finally:
-                self.spark.conf.set(mode_key, prev)
-            new_rows = df.join(
-                F.broadcast(cdf), ["granularity", "p_date"], "left_anti"
-            )
-        if new_rows.head(1):
-            new_rows.write.mode("append").partitionBy("granularity", "p_date").parquet(
-                path
-            )
-
-    def _txn_upsert_points_agg(self, df, key) -> None:
-        """TXN_AGG form of the conflicted aggregate upsert: the
-        partitions that replace existing buckets rebuild into staged
-        files and land with their superseded files' removal as ONE
-        snapshot-isolated ``overwrite`` commit; fresh rows are a blind
-        append commit.  Readers keep the snapshot they planned against
-        (superseded files stay until ``txn_vacuum``); a racing writer
-        on the same partitions loses the CAS and must re-run.  Both
-        AGG_UPSERT_SNAPSHOT and the quiescence rule are moot here."""
-        import uuid as _uuid
-
-        from . import txnlog as TL
-
-        path = self.points_agg_path
-        parts = ["granularity", "p_date"]
-        if not TL.is_txn_table(path):
-            TL.txn_append(self.spark, df, path, parts, writer="agg")
-            return
-        base_ver, committed = TL.snapshot(path)
         existing = TL.txn_read(
-            self.spark, path, version=base_ver
+            self.spark, self.points_agg_path, version=base_ver
         ).select(df.columns)
-        touched = df.select(*parts).distinct()
         conflicts = (
-            existing.join(F.broadcast(touched), parts, "left_semi")
+            existing.join(
+                F.broadcast(df.select(*parts).distinct()), parts, "left_semi"
+            )
             .join(F.broadcast(df.select(*key)), key, "left_semi")
             .select(*parts)
             .distinct()
             .collect()  # metadata: bounded by touched-partition count
         )
-        new_rows = df
-        if conflicts:
-            cdf = local_rows_df(
-                self.spark,
-                [(r["granularity"], r["p_date"]) for r in conflicts],
-                "granularity string, p_date date",
-            )
-            keep = existing.join(
-                F.broadcast(cdf), parts, "left_semi"
-            ).join(df.select(*key), key, "left_anti")
-            out = keep.unionByName(
-                df.join(F.broadcast(cdf), parts, "left_semi")
-            )
-            segs = {
-                (f"granularity={r['granularity']}", f"p_date={r['p_date']}")
-                for r in conflicts
-            }
-            removes = sorted(
-                f
-                for f in committed
-                if any(
-                    set(s) <= set(f.split(os.sep)[:-1]) for s in segs
-                )
-            )
-            adds = TL.stage_files(
-                self.spark, out, path, parts, _uuid.uuid4().hex[:12]
-            )
-            TL.commit(
-                path,
-                adds,
-                removes,
-                "overwrite",
-                [],
-                base_version=base_ver,
-                writer="agg_upsert",
-            )
-            new_rows = df.join(F.broadcast(cdf), parts, "left_anti")
-        if new_rows.head(1):
-            TL.txn_append(self.spark, new_rows, path, parts, writer="agg")
-
-    def _agg_upsert_snapshot(self, df, conflicts, rebuilt) -> None:
-        """Snapshot-generation form of a conflicted aggregate upsert
-        (AGG_UPSERT_SNAPSHOT): hardlink every unconflicted
-        (granularity, p_date) partition into v=<n+1>, write the rebuilt
-        conflicted partitions plus the batch's fresh rows there, swap
-        ``_CURRENT``. Readers planned against v=<n> finish safely (one
-        retained generation), exactly like vacuum/compaction."""
-        src = self.points_agg_path
-        conflict_set = {(r["granularity"], str(r["p_date"])) for r in conflicts}
+        if not conflicts:
+            self.append_points_agg(df)
+            return
         cdf = local_rows_df(
             self.spark,
             [(r["granularity"], r["p_date"]) for r in conflicts],
             "granularity string, p_date date",
         )
-        fresh = df.join(F.broadcast(cdf), ["granularity", "p_date"], "left_anti")
-
-        def write(new_dir: str) -> None:
-            os.makedirs(new_dir, exist_ok=True)
-            for gdir in os.listdir(src):
-                if not gdir.startswith("granularity="):
-                    continue
-                g = gdir.split("=", 1)[1]
-                gpath = os.path.join(src, gdir)
-                for pdir in os.listdir(gpath):
-                    if not pdir.startswith("p_date="):
-                        continue
-                    p = pdir.split("=", 1)[1]
-                    if (g, p) in conflict_set:
-                        continue  # rewritten below
-                    s = os.path.join(gpath, pdir)
-                    d = os.path.join(new_dir, gdir, pdir)
-                    os.makedirs(d, exist_ok=True)
-                    for f in os.listdir(s):
-                        if f.endswith(".parquet"):
-                            os.link(os.path.join(s, f), os.path.join(d, f))
-            rebuilt.unionByName(fresh).write.mode("append").partitionBy(
-                "granularity", "p_date"
-            ).parquet(new_dir)
-
-        self._swap_version("points_agg", write)
-
-    def append_points_agg(self, df: DataFrame) -> None:
-        out = df.select(
-            *[f.name for f in POINTS_AGG_SCHEMA.fields]
-        ).withColumn("p_date", F.to_date("bucket_ts"))
-        if self.TXN_AGG:
-            from . import txnlog as TL
-
-            TL.txn_append(
-                self.spark,
-                out,
-                self.points_agg_path,
-                ["granularity", "p_date"],
-                writer="agg",
-            )
-            return
-        (
-            out.write.mode("append")
-            .partitionBy("granularity", "p_date")
-            .parquet(self.points_agg_path)
+        keep = existing.join(F.broadcast(cdf), parts, "left_semi").join(
+            df.select(*key), key, "left_anti"
         )
+        self._rewrite_partitions(
+            "points_agg",
+            base_ver,
+            committed,
+            keep.unionByName(df),
+            conflicts,
+            "agg_upsert",
+        )
+
+    # -- maintenance -------------------------------------------------------------
+    def vacuum_points(self, live: DataFrame) -> None:
+        """Drop the rows of streams not in ``live`` (one ``stream_id``
+        column) from every point table, compact superseded derived
+        versions, and reclaim files no longer in the latest snapshot.
+        Raw and aggregate rows of dead streams die by DELETION VECTORS
+        (one ``delete`` commit each, no partition rewrite; the dead id
+        list is bounded by stream count); derived points keep only the
+        winning ``seq`` per (stream, ts) through one ``overwrite``
+        commit. ``txn_vacuum`` then removes every superseded file, so
+        versions older than the new head stop being readable."""
+        for table, read in (
+            ("points_raw", self.read_points_raw),
+            ("points_agg", self.read_points_agg),
+        ):
+            root = self._point_root(table)
+            if not TL.is_txn_table(root):
+                continue
+            dead = [
+                r["stream_id"]
+                for r in read()
+                .select("stream_id")
+                .distinct()
+                .join(live, "stream_id", "left_anti")
+                .collect()
+            ]
+            if dead:
+                TL.txn_delete(
+                    self.spark,
+                    root,
+                    F.col("stream_id").isin(dead),
+                    writer="vacuum",
+                )
+            TL.txn_vacuum(root)
+        base_ver, committed = self._snapshot("points_derived")
+        if committed:
+            kept = _latest_seq(
+                self._read_points(
+                    "points_derived", POINTS_DERIVED_SCHEMA, base_ver
+                )
+            ).join(live, "stream_id", "left_semi")
+            self._rewrite_partitions(
+                "points_derived",
+                base_ver,
+                committed,
+                _stored(kept, POINTS_DERIVED_SCHEMA, "ts"),
+                None,
+                "vacuum",
+            )
+            TL.txn_vacuum(self.points_derived_path)
+
+
+def _latest_seq(df: DataFrame) -> DataFrame:
+    """Derived points with only the winning (highest) seq per key."""
+    w = Window.partitionBy("stream_id", "ts").orderBy(F.col("seq").desc())
+    return (
+        df.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .drop("_rk")
+    )
+
+
+def _stored(df: DataFrame, schema: T.StructType, ts_col: str) -> DataFrame:
+    """``df`` in a point table's stored shape: ``schema``'s columns plus
+    the p_date partition (UTC day of ``ts_col``)."""
+    return df.select(*schema.fieldNames()).withColumn(
+        "p_date", F.to_date(ts_col)
+    )

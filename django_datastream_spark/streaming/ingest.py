@@ -89,10 +89,12 @@ class StreamingIngest:
     lands them. Swap the readStream source for Kafka in production — the
     foreachBatch body is source-agnostic (see ``attach``/``kafka_source``).
 
-    Operational note: each micro-batch appends one small parquet file per
-    touched p_date partition; schedule ``tables.compact_points_raw()``
-    (writer quiesced) to fold them back to ~128 MB files. The streams
-    metadata log auto-compacts on its own.
+    Operational note: each micro-batch is one commit adding a small
+    parquet file per touched p_date partition; schedule
+    ``tables.compact_points_raw()`` (an OPTIMIZE commit that runs
+    alongside ingest and returns the number of files it rewrote) to
+    fold them back to ~128 MB files. The streams metadata log
+    auto-compacts on its own.
     """
 
     def __init__(

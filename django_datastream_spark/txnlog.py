@@ -2905,6 +2905,25 @@ def fold_horizon(table_root: str) -> int:
     return best if best is not None else head
 
 
+def readable_versions(table_root: str) -> list[int]:
+    """Versions that still read back, oldest first: foldable (at or
+    above :func:`fold_horizon`) and with every data file of the
+    snapshot still on disk — :func:`txn_vacuum` reclaims the files of
+    superseded snapshots, after which those versions are gone even
+    though their commits remain in the log. One listing of the table
+    plus one fold per version."""
+    if not is_txn_table(table_root):
+        return []
+    from .operators.merge import _list_data_files
+
+    on_disk = _list_data_files(table_root)
+    return [
+        v
+        for v in range(fold_horizon(table_root), latest_version(table_root) + 1)
+        if snapshot(table_root, v)[1] <= on_disk
+    ]
+
+
 def txn_log_cleanup(table_root: str, keep_commits: int = 0) -> dict:
     """Metadata cleanup — the txn tier's RETENTION KNOB (the
     ``cleanup_delta_log`` twin): drop commit JSONs at or below the

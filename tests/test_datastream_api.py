@@ -421,7 +421,9 @@ def test_downsample_with_watermarkless_streams_stays_complete(engine):
 
 def test_vacuum_keeps_planned_reader_valid(engine):
     """A DataFrame planned before vacuum must still be fully readable
-    after it — _swap_version retains the previous snapshot generation."""
+    after it — vacuum reclaims only files the latest snapshot no longer
+    references, and with no dead streams and no compaction the
+    planned reader's files are all still live."""
     sid = engine.ensure_stream({"title": "vr"})
     engine.append_multiple(
         [{"stream_id": sid, "value": float(i), "timestamp": ts(i)} for i in range(50)]
@@ -429,7 +431,7 @@ def test_vacuum_keeps_planned_reader_valid(engine):
     df = engine.get_data(sid, "seconds").df
     assert df.count() == 50  # planned + executed against the pre-vacuum snapshot
     engine.vacuum()
-    # the old generation is retained: the already-planned reader still works
+    # the already-planned reader's files survived: it still works
     assert df.count() == 50
     assert [p["v"] for p in engine.get_data(sid, "seconds")][:3] == [0.0, 1.0, 2.0]
 

@@ -76,50 +76,6 @@ def test_streams_log_auto_compaction_can_be_disabled(spark, tmp_path):
     ) + dt.timedelta(seconds=11)
 
 
-def test_compact_points_raw_rewrites_only_fat_partitions(
-    spark, tmp_path, monkeypatch
-):
-    """Partition-bounded OPTIMIZE: only partitions past the file-count
-    threshold are rewritten, others are hardlinked unchanged; data and a
-    pre-planned reader survive the snapshot swap.  PLAIN-path machinery
-    by design (txn mode compacts via txn_optimize, covered in
-    test_txn_points/test_txnlog) — pinned so SPARK_GRAFT_TXN=1 runs of
-    the suite still exercise it."""
-    from django_datastream_spark.api import Datastream
-    from django_datastream_spark.storage import Tables
-
-    monkeypatch.setattr(Tables, "TXN_POINTS", False)
-    monkeypatch.setattr(Tables, "TXN_AGG", False)
-    engine = Datastream(spark, str(tmp_path / "store"))
-    sid = engine.ensure_stream({"title": "cf"})
-    d0 = dt.datetime(2024, 1, 1, tzinfo=UTC)
-    # day 0: 6 separate appends → 6+ files; day 1: one append
-    for i in range(6):
-        engine.append(sid, float(i), d0 + dt.timedelta(seconds=i))
-    engine.append(sid, 99.0, d0 + dt.timedelta(days=1))
-    t = engine.tables
-
-    def files_of(day: str) -> list[str]:
-        d = os.path.join(t.points_raw_path, f"p_date={day}")
-        return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-
-    assert len(files_of("2024-01-01")) >= 6
-    day1_before = files_of("2024-01-02")
-    reader = engine.get_data(sid, "seconds").df
-    assert reader.count() == 7
-
-    n = t.compact_points_raw(max_files_per_partition=3)
-    assert n == 1
-    assert len(files_of("2024-01-01")) == 1  # compacted
-    assert files_of("2024-01-02") == day1_before  # hardlinked, untouched
-    # data identical through the swap, old planned reader still valid
-    vals = [p["v"] for p in engine.get_data(sid, "seconds")]
-    assert vals == [0.0, 1.0, 2.0, 3.0, 4.0, 5.0, 99.0]
-    assert reader.count() == 7
-    # idempotent: nothing left over the threshold
-    assert t.compact_points_raw(max_files_per_partition=3) == 0
-
-
 def test_batch_seq_assignment_is_not_single_partition(spark):
     """The per-batch seq window must partition by stream (parallel hash
     exchange), never a global single-partition sort."""
@@ -212,57 +168,42 @@ def test_upsert_points_agg_appends_unless_keys_collide(spark, tmp_path):
         assert got[base.replace(tzinfo=None) + dt.timedelta(hours=i)] == expect
 
 
-def test_time_travel_reads_prior_snapshot(spark, tmp_path, monkeypatch):
-    """Snapshot retention + read_table_at: each rewrite boundary cuts a
-    version; retained versions read back exactly, vacuumed ones raise.
-    PLAIN-path snapshot-pointer machinery by design (txn mode time
-    travel is commit-granular, covered in test_txn_points) — pinned so
-    SPARK_GRAFT_TXN=1 suite runs still exercise it."""
-    import datetime as dt2
-
-    from django_datastream_spark.api import Datastream
-    from django_datastream_spark.storage import Tables
-
-    monkeypatch.setattr(Tables, "TXN_POINTS", False)
-    monkeypatch.setattr(Tables, "TXN_AGG", False)
-    engine = Datastream(spark, str(tmp_path / "store"))
-    t = engine.tables
+def test_time_travel_reads_prior_snapshot(spark, tmp_path):
+    """Snapshot retention + read_table_at on the streams registry (the
+    one table still on snapshot generations): each log compaction cuts
+    a version; retained versions read back exactly as of their cut,
+    versions never cut raise."""
+    t = Tables(spark, str(tmp_path / "store"))
     t.SNAPSHOT_RETAIN = 3
-    sid = engine.ensure_stream({"title": "tt"})
-    t0 = dt2.datetime(2024, 5, 1, tzinfo=dt2.timezone.utc)
-    engine.append_multiple(
-        [
-            {"stream_id": sid, "value": float(i), "timestamp": t0 + dt2.timedelta(seconds=i)}
-            for i in range(50)
-        ]
-    )
-    # rewrite boundary #1: compaction cuts a new points_raw version
-    t.compact_points_raw(max_files_per_partition=1)
-    v_after_first = t._current_version("points_raw")
-    n_before = t.read_table_at("points_raw", v_after_first).count()
-    assert n_before == 50
+    t.upsert_streams([dict(_row(0), stream_id=f"s{i}") for i in range(5)])
+    # rewrite boundary #1: compaction cuts a new streams version
+    t.compact_streams()
+    v_after_first = t._current_version("streams")
+    assert t.read_table_at("streams", v_after_first).count() == 5
 
-    engine.append_multiple(
-        [
-            {"stream_id": sid, "value": 1.0, "timestamp": t0 + dt2.timedelta(seconds=100 + i)}
-            for i in range(10)
-        ]
-    )
+    t.upsert_streams([dict(_row(0), stream_id=f"s{i}") for i in range(5, 8)])
     # rewrite boundary #2
-    t.compact_points_raw(max_files_per_partition=1)
-    v_now = t._current_version("points_raw")
+    t.compact_streams()
+    v_now = t._current_version("streams")
     assert v_now > v_after_first
-    # current snapshot has all 60; the PRIOR snapshot still reads as-of
-    # its cut — appends after boundary #1 landed in the then-current dir,
-    # so the retained history is exactly the rewrite-boundary states
-    assert t.read_points_raw().count() == 60
-    assert v_after_first in t.snapshot_versions("points_raw")
+    # current snapshot has all 8 streams; the prior generation is
+    # retained — its compacted rows plus the upserts that landed in it
+    # before the next cut
+    assert t.read_streams().count() == 8
+    assert v_after_first in t.snapshot_versions("streams")
+    assert t.read_table_at("streams", v_after_first).count() == 8
+
+    # boundary #3 compacts tombstones away; v_now keeps its log state
+    # (8 compacted rows + the 3 tombstones that landed in it)
+    t.delete_streams_rows(["s0", "s1", "s2"])
+    t.compact_streams()
+    assert t.read_streams().count() == 5
+    assert t.read_table_at("streams", v_now).count() == 11
+    assert t.snapshot_versions("streams") == [v_after_first, v_now, v_now + 1]
 
     # a version never cut raises
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        t.read_table_at("points_raw", 999)
+    with pytest.raises(ValueError):
+        t.read_table_at("streams", 999)
 
 
 def test_snapshot_retention_vacuums_old_generations(spark, tmp_path):
@@ -279,83 +220,6 @@ def test_snapshot_retention_vacuums_old_generations(spark, tmp_path):
 
     with _pytest.raises(ValueError):
         t.read_table_at("demo", vs[0] - 1)
-
-
-def test_agg_upsert_snapshot_keeps_pre_upsert_readers_safe(
-    spark, tmp_path, monkeypatch
-):
-    """AGG_UPSERT_SNAPSHOT: a conflicted aggregate upsert lands in a
-    NEW snapshot generation (untouched partitions hardlinked,
-    conflicted ones rewritten, pointer swapped), so a reader that
-    planned against the previous generation still collects every row
-    AFTER the upsert — the guarantee vacuum/compaction already give,
-    extended to the one remaining in-place rewrite.  PLAIN-path
-    machinery by design (TXN_AGG makes the flag moot — one overwrite
-    commit, covered in test_txn_points); pinned so SPARK_GRAFT_TXN=1
-    suite runs still exercise it."""
-    from django_datastream_spark.storage import POINTS_AGG_SCHEMA, Tables
-
-    monkeypatch.setattr(Tables, "TXN_POINTS", False)
-    monkeypatch.setattr(Tables, "TXN_AGG", False)
-    t = Tables(spark, str(tmp_path / "store"))
-    t.AGG_UPSERT_SNAPSHOT = True
-    base = dt.datetime(2024, 1, 1, tzinfo=UTC)
-
-    def upsert(rows):
-        t.upsert_points_agg(spark.createDataFrame(rows, POINTS_AGG_SCHEMA))
-
-    upsert(
-        [_agg_row("s", "hours", base + dt.timedelta(hours=i), float(i))
-         for i in range(4)]
-        + [_agg_row("s", "days", base, 0.5)]
-    )
-    v_before = t._current_version("points_agg")
-    old_dir = t.points_agg_path
-    # a long-running reader plans against the current generation NOW
-    old_reader = spark.read.parquet(old_dir)
-
-    # conflicted upsert: replaces hour-1, adds hour-4
-    upsert(
-        [
-            _agg_row("s", "hours", base + dt.timedelta(hours=1), 100.0),
-            _agg_row("s", "hours", base + dt.timedelta(hours=4), 4.0),
-        ]
-    )
-    assert t._current_version("points_agg") == v_before + 1
-    # old generation intact: the pre-upsert reader still sees its
-    # full, consistent snapshot
-    got_old = {
-        r["bucket_ts"]: r["v"]["mean"]
-        for r in old_reader.filter(
-            F.col("granularity") == "hours"
-        ).collect()
-    }
-    assert got_old == {
-        base.replace(tzinfo=None) + dt.timedelta(hours=i): float(i)
-        for i in range(4)
-    }
-    # new generation: replacement won, fresh bucket landed, the
-    # untouched days partition survived (hardlinked)
-    got_new = {
-        r["bucket_ts"]: r["v"]["mean"]
-        for r in t.read_points_agg().filter(
-            F.col("granularity") == "hours"
-        ).collect()
-    }
-    want = {
-        base.replace(tzinfo=None) + dt.timedelta(hours=i): float(i)
-        for i in range(5)
-    }
-    want[base.replace(tzinfo=None) + dt.timedelta(hours=1)] = 100.0
-    assert got_new == want
-    assert (
-        t.read_points_agg().filter(F.col("granularity") == "days").count()
-        == 1
-    )
-    # pure-add upserts stay plain appends (no generation churn)
-    v = t._current_version("points_agg")
-    upsert([_agg_row("s", "hours", base + dt.timedelta(hours=9), 9.0)])
-    assert t._current_version("points_agg") == v
 
 
 def test_local_rows_df_is_arrow_local_and_faithful(spark):

@@ -1,12 +1,13 @@
-"""The core engine's hottest table on the transactional layer:
-``Tables.TXN_POINTS = True`` routes points_raw appends/reads/compaction
-through the commit log (ACID, multi-writer-safe, commit-granular time
-travel) while every engine behavior stays identical to the plain path.
+"""The engine's point tables on the transactional layer: points_raw,
+points_agg and points_derived appends, upserts, compaction and vacuum
+are commits on their logs (ACID, multi-writer-safe, snapshot-isolated
+readers, commit-granular time travel).
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 
@@ -23,9 +24,7 @@ def ts(i: int) -> dt.datetime:
 
 @pytest.fixture()
 def engine(spark, tmp_path) -> Datastream:
-    e = Datastream(spark, str(tmp_path / "store"))
-    e.tables.TXN_POINTS = True
-    return e
+    return Datastream(spark, str(tmp_path / "store"))
 
 
 def _ingest(engine, n=120):
@@ -117,8 +116,7 @@ def test_engine_vacuum_uses_deletion_vectors(engine):
 
 def test_engine_time_travel_is_commit_granular(engine):
     """snapshot_versions/read_table_at run over the commit log: every
-    append is its own time-travelable version (the plain path only
-    keeps SNAPSHOT_RETAIN rewrite generations)."""
+    append is its own time-travelable version."""
     sid = _ingest(engine, n=10)
     engine.append_multiple(
         [
@@ -136,9 +134,8 @@ def test_engine_time_travel_is_commit_granular(engine):
 
 
 def test_agg_time_travel_is_commit_granular(engine):
-    """Under TXN_AGG, points_agg versions are commit versions too: the
-    first downsample's commit stays readable after a second one."""
-    engine.tables.TXN_AGG = True
+    """points_agg versions are commit versions too: the first
+    downsample's commit stays readable after a second one."""
     sid = _ingest(engine, n=90)
     engine.downsample_streams(until=ts(90))
     engine.append_multiple(
@@ -161,9 +158,9 @@ def test_agg_time_travel_is_commit_granular(engine):
 
 
 def test_streaming_ingest_lands_as_commits(spark, tmp_path):
-    """StreamingIngest writes through append_points_raw, so with
-    TXN_POINTS each micro-batch is its own log commit — validation,
-    rejects and metadata advance behave identically."""
+    """StreamingIngest writes through append_points_raw, so each
+    micro-batch is its own log commit — validation, rejects and
+    metadata advance behave identically."""
     import json
     import os
 
@@ -175,7 +172,6 @@ def test_streaming_ingest_lands_as_commits(spark, tmp_path):
         )
 
     e = Datastream(spark, str(tmp_path / "store"))
-    e.tables.TXN_POINTS = True
     sid = e.ensure_stream({"title": "s"})
     src = str(tmp_path / "incoming")
     ing = StreamingIngest(e, src, str(tmp_path / "cp"))
@@ -204,87 +200,136 @@ def test_streaming_ingest_lands_as_commits(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_agg_upserts_are_snapshot_isolated_commits(spark, tmp_path):
-    """TXN_AGG: downsample → append more → downsample again (the
-    watermark-tail bucket recomputes = a conflicted upsert). The txn
-    engine's aggregates match a plain engine's exactly, and the
-    conflicted upsert shows up as one ``overwrite`` commit."""
-    def build(root, txn):
-        e = Datastream(spark, root)
-        if txn:
-            e.tables.TXN_POINTS = True
-            e.tables.TXN_AGG = True
-        sid = e.ensure_stream(
-            {"title": "x"}, highest_granularity="seconds"
-        )
-        e.append_multiple(
-            [
-                {"stream_id": sid, "timestamp": ts(i), "value": float(i)}
-                for i in range(90)
-            ]
-        )
-        e.downsample_streams(until=ts(90))
-        e.append_multiple(
-            [
-                {"stream_id": sid, "timestamp": ts(90 + i),
-                 "value": float(i)}
-                for i in range(90)
-            ]
-        )
-        e.downsample_streams(until=ts(3600))
-        return e, sid
+def test_agg_upserts_are_snapshot_isolated_commits(engine):
+    """downsample → append more → downsample again (the watermark-tail
+    bucket recomputes = a conflicted upsert): the aggregates are exact,
+    and the conflicted upsert lands its rebuilt partition and fresh
+    buckets as ONE ``overwrite`` commit."""
+    sid = engine.ensure_stream({"title": "x"}, highest_granularity="seconds")
+    points = [(i, float(i)) for i in range(90)]
+    engine.append_multiple(
+        [{"stream_id": sid, "timestamp": ts(i), "value": v} for i, v in points]
+    )
+    engine.downsample_streams(until=ts(90))
+    more = [(90 + i, float(i)) for i in range(90)]
+    engine.append_multiple(
+        [{"stream_id": sid, "timestamp": ts(i), "value": v} for i, v in more]
+    )
+    engine.downsample_streams(until=ts(3600))
 
-    plain, sid_p = build(str(tmp_path / "plain"), txn=False)
-    txn, sid_t = build(str(tmp_path / "txn"), txn=True)
-
-    def aggs(e, sid):
-        return [
-            (r["t"]["mean"], r["v"]["mean"], r["v"]["count"])
-            for r in e.get_data(
-                sid, "minutes",
-                value_downsamplers=["mean", "count"],
-                time_downsamplers=["mean"],
-            )
-        ]
-
-    assert aggs(plain, sid_p) == aggs(txn, sid_t)
+    by_minute: dict[int, list] = {}
+    for i, v in points + more:
+        by_minute.setdefault(i // 60, []).append((i, v))
+    want = [
+        (  # t.mean carries whole epoch seconds
+            ts(sum(i for i, _ in pts) // len(pts)).replace(tzinfo=None),
+            sum(v for _, v in pts) / len(pts),
+            len(pts),
+        )
+        for _, pts in sorted(by_minute.items())
+    ]
+    got = [
+        (r["t"]["mean"], r["v"]["mean"], r["v"]["count"])
+        for r in engine.get_data(
+            sid, "minutes",
+            value_downsamplers=["mean", "count"],
+            time_downsamplers=["mean"],
+        )
+    ]
+    assert got == want
     ops = [
         r["op"]
         for r in TL.txn_history(
-            spark, txn.tables.points_agg_path
+            engine.spark, engine.tables.points_agg_path
         ).collect()
     ]
     assert "overwrite" in ops  # the tail-bucket recompute
     assert "append" in ops
 
 
-def test_mode_flip_adopts_existing_plain_store(spark, tmp_path):
-    """Turning txn mode ON over an EXISTING plain store (the
-    SPARK_GRAFT_TXN=1 upgrade path) must adopt the committed files on
-    the FIRST READ — not silently show an empty table until the first
-    append triggers adoption — and subsequent appends commit through
-    the log on top of the adopted history."""
-    plain = Datastream(spark, str(tmp_path / "store"))
-    sid = _ingest(plain, n=50)
-    agg_rows_before = plain.tables.read_points_agg().count()
-
-    upgraded = Datastream(spark, str(tmp_path / "store"))
-    upgraded.tables.TXN_POINTS = True
-    upgraded.tables.TXN_AGG = True
-    # read BEFORE any write: the adoption commit must happen here
-    got = [
-        p["v"] for p in upgraded.get_data(sid, "seconds")
-    ]
-    assert got == [float(i) for i in range(50)]
-    assert TL.is_txn_table(upgraded.tables.points_raw_path)
-    # agg table adopts on read too (empty or not)
-    assert upgraded.tables.read_points_agg().count() == agg_rows_before
-
-    # post-flip appends are log commits over the adopted base
-    v0 = TL.latest_version(upgraded.tables.points_raw_path)
-    upgraded.append_multiple(
-        [{"stream_id": sid, "timestamp": ts(50), "value": 50.0}]
+def test_time_travel_skips_vacuumed_versions(engine):
+    """Two appends, an OPTIMIZE, then vacuum: the appends' files are
+    reclaimed, so their versions are no longer listed and reading one
+    raises ValueError (not a missing-path error from Spark)."""
+    sid = _ingest(engine, n=10)
+    engine.append_multiple(
+        [
+            {"stream_id": sid, "timestamp": ts(10 + i), "value": 1.0}
+            for i in range(10)
+        ]
     )
-    assert TL.latest_version(upgraded.tables.points_raw_path) > v0
-    got = [p["v"] for p in upgraded.get_data(sid, "seconds")]
-    assert got == [float(i) for i in range(51)]
+    assert engine.tables.compact_points_raw() == 2
+    engine.vacuum()
+    assert engine.tables.snapshot_versions("points_raw") == [3]
+    with pytest.raises(ValueError, match="not in log"):
+        engine.tables.read_table_at("points_raw", 1).count()
+    assert engine.tables.read_table_at("points_raw", 3).count() == 20
+
+
+def test_derived_replace_is_one_overwrite_commit(engine):
+    """backprocess_streams(materialize=True, replace=True) rebuilds the
+    touched p_date partitions as ONE overwrite commit: a ghost row is
+    retracted, and a reader planned before the backfill still counts
+    its own snapshot (the superseded files stay until vacuum)."""
+    from pyspark.sql import functions as F
+
+    src = engine.ensure_stream({"title": "src"})
+    engine.append_multiple(
+        [
+            {"stream_id": src, "value": float(i), "timestamp": ts(i * 10)}
+            for i in range(6)
+        ]
+    )
+    d = engine.ensure_stream(
+        {"title": "d"}, derive_from=[src], derive_op="derivative"
+    )
+    engine.backprocess_streams(materialize=True)
+    ghost = ts(9999).replace(tzinfo=None)
+    engine.tables.append_points_derived(
+        engine.spark.createDataFrame(
+            [(d, ghost, 1, 123.0)],
+            "stream_id string, ts timestamp, seq long, value double",
+        )
+    )
+    root = engine.tables.points_derived_path
+    v0 = TL.latest_version(root)
+    reader = engine.tables.read_points_derived(latest_only=False)
+    n_before = reader.count()
+
+    view = engine.backprocess_streams(materialize=True, replace=True)
+    hist = TL.txn_history(engine.spark, root).collect()
+    assert [r["op"] for r in hist if r["version"] > v0] == ["overwrite"]
+    got = {
+        (r["stream_id"], r["ts"], r["value"])
+        for r in engine.tables.read_points_derived().collect()
+    }
+    assert got == {(r["stream_id"], r["ts"], r["value"]) for r in view.collect()}
+    assert ghost not in {
+        r["ts"]
+        for r in engine.tables.read_points_derived()
+        .filter(F.col("stream_id") == d)
+        .collect()
+    }
+    assert reader.count() == n_before
+
+
+def test_refuses_plain_store(spark, tmp_path):
+    """A store left by the retired plain versioned-parquet layout would
+    read as empty; opening it raises instead, naming the table dir."""
+    for table, marker in (
+        ("points_raw", "_CURRENT"),
+        ("points_agg", "v=0"),
+        ("points_derived", "v=3"),
+    ):
+        root = tmp_path / table
+        plain = root / table
+        plain.mkdir(parents=True)
+        if marker == "_CURRENT":
+            (plain / marker).write_text("0")
+        else:
+            (plain / marker).mkdir()
+        with pytest.raises(ValueError, match=re.escape(str(plain))):
+            Datastream(spark, str(root))
+    # a points dir without the plain markers is not refused
+    (tmp_path / "ok" / "points_raw").mkdir(parents=True)
+    Datastream(spark, str(tmp_path / "ok"))
