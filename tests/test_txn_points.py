@@ -247,6 +247,62 @@ def test_agg_upserts_are_snapshot_isolated_commits(engine):
     assert "append" in ops
 
 
+def test_conflicted_agg_upsert_keeps_planned_readers(spark, tmp_path):
+    """A conflicted aggregate upsert is ONE overwrite commit carrying the
+    rebuilt partition AND the batch's fresh buckets: a reader planned
+    before it still collects its full pre-upsert snapshot, the
+    replacement wins afterwards, and the untouched days partition keeps
+    its files."""
+    from pyspark.sql import functions as F
+
+    from django_datastream_spark.storage import POINTS_AGG_SCHEMA, Tables
+
+    t = Tables(spark, str(tmp_path / "store"))
+    base = T0.replace(tzinfo=None)
+    sid = "s"
+
+    def row(gran, hour, mean):
+        b = base + dt.timedelta(hours=hour)
+        v = {
+            "mean": mean, "sum": mean, "min": mean, "max": mean,
+            "sum_squares": mean * mean, "std_dev": 0.0, "count": 1,
+            "frequencies": None, "most_often": None, "least_often": None,
+        }
+        return (sid, gran, b, v, {"first": b, "last": b, "mean": b},
+                int(b.replace(tzinfo=UTC).timestamp()))
+
+    def upsert(rows):
+        t.upsert_points_agg(spark.createDataFrame(rows, POINTS_AGG_SCHEMA))
+
+    def hours(df):
+        return {
+            r["bucket_ts"]: r["v"]["mean"]
+            for r in df.filter(F.col("granularity") == "hours").collect()
+        }
+
+    upsert([row("hours", i, float(i)) for i in range(4)] + [row("days", 0, 0.5)])
+    _, files0 = TL.snapshot(t.points_agg_path)
+    days_files = {f for f in files0 if "granularity=days" in f}
+    reader = t.read_points_agg()  # planned against the pre-upsert snapshot
+    v0 = TL.latest_version(t.points_agg_path)
+
+    upsert([row("hours", 1, 100.0), row("hours", 4, 4.0)])
+    ops = [
+        r["op"]
+        for r in TL.txn_history(spark, t.points_agg_path).collect()
+        if r["version"] > v0
+    ]
+    assert ops == ["overwrite"]
+    assert hours(reader) == {
+        base + dt.timedelta(hours=i): float(i) for i in range(4)
+    }
+    want = {base + dt.timedelta(hours=i): float(i) for i in range(5)}
+    want[base + dt.timedelta(hours=1)] = 100.0
+    assert hours(t.read_points_agg()) == want
+    _, files1 = TL.snapshot(t.points_agg_path)
+    assert {f for f in files1 if "granularity=days" in f} == days_files
+
+
 def test_time_travel_skips_vacuumed_versions(engine):
     """Two appends, an OPTIMIZE, then vacuum: the appends' files are
     reclaimed, so their versions are no longer listed and reading one
