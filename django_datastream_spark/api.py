@@ -43,6 +43,7 @@ from .granularity import BY_NAME, GRANULARITIES, Granularity, coarser_than
 from .operators import derive as derive_ops
 from .operators import downsample as ds_ops
 from . import storage
+from . import txnlog as TL
 from .storage import STREAMS_SCHEMA, Tables
 
 _UTC = _dt.timezone.utc
@@ -1077,17 +1078,20 @@ class Datastream:
     def vacuum(self) -> None:
         """Physically drop datapoints of deleted streams and compact
         superseded metadata/derived-point versions (the deferred half of
-        S5). The streams registry is rewritten into a fresh snapshot
-        directory behind an atomic ``_CURRENT`` swap; the point tables
-        change by commits (deletion vectors for dead raw/aggregate rows,
-        one overwrite commit for derived points) and then reclaim every
-        file the latest snapshot no longer references — readers planned
-        against an OLDER snapshot lose those files, so run vacuum from a
-        maintenance window. Metadata WRITERS must be quiesced for the
-        registry swap: rows appended to the streams log while it runs
-        would be silently dropped."""
+        S5). Every table changes by commits: the streams registry
+        collapses to its live rows in one overwrite commit (a metadata
+        upsert landing meanwhile makes it raise
+        ``txnlog.CommitConflictError`` — nothing is lost; re-run),
+        dead raw/aggregate rows die by deletion vectors and derived
+        points are compacted by one overwrite commit. Each table then
+        reclaims every file its latest snapshot no longer references
+        (``txnlog.txn_vacuum``) — readers planned against an OLDER
+        snapshot lose those files, so run vacuum from a maintenance
+        window."""
         t = self.tables
         t.compact_streams()
+        if TL.is_txn_table(t.streams_path):
+            TL.txn_vacuum(t.streams_path)
         t.vacuum_points(t.read_streams().select("stream_id"))
 
     # ------------------------------------------------------------------

@@ -27,10 +27,9 @@ Execution shape (Delta-style file-level pruning, no path arithmetic):
    mis-target a delete;
 3. the rebuilt rows (kept + replaced [+ fresh inserts]) are APPENDED
    FIRST, then a single-file ``_MANIFEST`` swap COMMITS the merge
-   (``os.replace`` — atomic on POSIX, the same trick storage.py's
-   ``_CURRENT`` pointer uses and the minimal form of a ``_delta_log``
-   entry), and only after the commit are the old conflict files
-   deleted.
+   (``os.replace`` — atomic on POSIX, the minimal form of a
+   ``_delta_log`` entry), and only after the commit are the old
+   conflict files deleted.
 
 Crash-consistency contract (the exactly-once guarantee):
 

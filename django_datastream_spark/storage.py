@@ -1,15 +1,15 @@
 """Physical table layout (SURVEY.md §1.3 / FIXTURES.md B1).
 
-Four tables under a root directory:
+Four tables under a root directory, each on its own transactional
+commit log (:mod:`.txnlog`, ``<root>/<table>_txn``):
 
-- ``streams``        — metadata, stored as an APPEND-ONLY LOG of row
-                       versions (``_v`` monotone, ``_deleted`` tombstone)
-                       behind a tiny snapshot pointer (``_CURRENT`` names
-                       the live ``v=<n>/`` dir). Reads resolve the latest
+- ``streams``        — metadata, stored as row versions (``_v``
+                       monotone, ``_deleted`` tombstone). Every upsert is
+                       a blind append commit; reads resolve the latest
                        version per stream_id — MERGE semantics without
                        ever collecting or rewriting the table on the
-                       driver. Compaction snapshots the live rows into a
-                       new version dir and swaps the pointer.
+                       driver. Compaction collapses the log to its live
+                       rows in one snapshot-isolated ``overwrite`` commit.
 - ``points_raw``     — appends at each stream's highest granularity,
                        partitioned by ``p_date`` (UTC day of ts) so range
                        scans prune partitions.
@@ -24,14 +24,14 @@ Four tables under a root directory:
                        that replace existing buckets rebuild only the
                        affected partitions.
 
-The three POINT tables live on the transactional commit log
-(:mod:`.txnlog`, one log per table under ``<root>/<table>_txn``):
-every append is an ACID, auto-rebasing commit; a partition rebuild
-(conflicted aggregate upsert, derived backfill with ``replace=True``,
-vacuum's derived compaction) is ONE snapshot-isolated ``overwrite``
-commit; compaction is ``txn_optimize``; dead-stream rows die by
-deletion vectors; and time travel runs over commit versions. Readers
-keep the snapshot they planned against until ``txn_vacuum`` reclaims
+Every append is an ACID, auto-rebasing commit; a rewrite (conflicted
+aggregate upsert, derived backfill with ``replace=True``, vacuum's
+derived compaction, registry compaction) is ONE snapshot-isolated
+``overwrite`` commit that raises ``txnlog.CommitConflictError`` rather
+than lose a rival's rows; point-table compaction is ``txn_optimize``;
+dead-stream rows die by deletion vectors; and time travel runs over
+commit versions. Readers keep the snapshot they planned against until
+``txn_vacuum`` (or, for the registry, the next compaction) reclaims
 superseded files.
 
 All aggregate columns are *algebraic carriers* (sum, count, sum_squares,
@@ -42,11 +42,10 @@ cascade O(raw + Σ aggregates) instead of O(6 × raw) at 100 TB.
 
 STORAGE-REACH BOUNDARY: the commit log is FileIO-seam-routed and its
 commit CAS is object-store-capable (txnlog's ``_root``/``_store``), so
-the point tables can sit on an object store. The streams registry
-(its ``_CURRENT`` pointer swap via ``os.replace``) and the flock'd
-external-catalog RMW remain POSIX-rooted — pure metadata, kB-scale:
-a mount or local disk serves it. Documented here so the boundary is
-a stated contract, not an accident of ``os.`` calls.
+every table can sit on an object store. The flock'd external-catalog
+RMW remains POSIX-rooted — pure metadata, kB-scale: a mount or local
+disk serves it. Documented here so the boundary is a stated contract,
+not an accident of ``os.`` calls.
 """
 
 from __future__ import annotations
@@ -60,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import txnlog as TL
+from .operators.merge import delete_rel_files
 
 
 def local_rows_df(spark: SparkSession, data, schema) -> DataFrame:
@@ -221,50 +221,36 @@ _RAW_READ_SCHEMA = T.StructType(
     list(POINTS_RAW_SCHEMA.fields) + [T.StructField("p_date", T.DateType())]
 )
 
-#: the point tables (each on its own commit log) -> partition columns
-_POINT_TABLES = {
+#: every table (each on its own commit log) -> partition columns
+_TABLES = {
+    "streams": [],
     "points_raw": ["p_date"],
     "points_derived": ["p_date"],
     "points_agg": ["granularity", "p_date"],
 }
 
+#: compact the streams registry once its snapshot holds more than this
+#: many live files — keeps metadata reads O(live streams) under
+#: continuous ingest (each micro-batch upserts 1–3 small files)
+_STREAMS_COMPACT_AT = 48
+
 
 class Tables:
     """Parquet-backed storage for one engine instance.
 
-    The point tables are commit-log tables: writers of any number
-    commit concurrently (appends rebase, conflicting rewrites raise
+    Every table is a commit-log table: writers of any number commit
+    concurrently (appends rebase, conflicting rewrites raise
     ``txnlog.CommitConflictError``) and readers are snapshot-isolated.
-    The one single-writer rule left is the streams registry's
-    compaction (``compact_streams``, run by vacuum and implicitly by
-    upserts while ``auto_compact_streams`` is on): its pointer swap
-    captures the log as THIS process sees it, so metadata writers must
-    be quiesced while it runs.
     """
-
-    #: auto-compact the streams version log once it exceeds this many
-    #: parquet files — keeps metadata reads O(live streams) under
-    #: continuous ingest (each micro-batch appends 1–3 small files)
-    STREAMS_LOG_MAX_FILES = 48
-
-    #: implicit streams-log compaction inside upserts assumes this process
-    #: is the log's only writer (see _maybe_compact_streams); flip off for
-    #: multi-writer metadata deployments and compact from one owner
-    auto_compact_streams = True
-
-    #: streams-registry snapshot generations retained (current + priors).
-    #: 2 (default) keeps readers planned against the previous generation
-    #: safe; raise it to keep a deeper streams time-travel history
-    SNAPSHOT_RETAIN = 2
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
         self._v_counter = 0
-        # a store written by the retired plain-parquet layout would
-        # otherwise read as EMPTY: refuse it loudly instead
-        for table in _POINT_TABLES:
+        # a store written by the retired pointer-swap parquet layout
+        # would otherwise read as EMPTY: refuse it loudly instead
+        for table in _TABLES:
             plain = os.path.join(root, table)
             if (
                 os.path.isdir(plain)
@@ -272,118 +258,58 @@ class Tables:
                     n == "_CURRENT" or n.startswith("v=")
                     for n in os.listdir(plain)
                 )
-                and not TL.is_txn_table(self._point_root(table))
+                and not TL.is_txn_table(self._table_root(table))
             ):
                 raise ValueError(
                     f"{plain} holds a plain versioned-parquet table; "
-                    f"point tables are read only from their commit log "
-                    f"({self._point_root(table)}) — re-ingest it"
+                    f"tables are read only from their commit log "
+                    f"({self._table_root(table)}) — re-ingest it"
                 )
-
-    # -- snapshot pointer (streams registry) ---------------------------------
-    def _current_version(self, table: str) -> int:
-        ptr = os.path.join(self.root, table, "_CURRENT")
-        try:
-            with open(ptr) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return 0
-
-    def _data_dir(self, table: str) -> str:
-        return os.path.join(self.root, table, f"v={self._current_version(table)}")
-
-    def _swap_version(self, table: str, write_fn) -> None:
-        """Write a full replacement snapshot into v=<n+1>, then atomically
-        repoint ``_CURRENT``. The previous version dir is kept for one
-        generation (readers planned against it finish safely) and removed
-        on the following swap."""
-        import shutil
-
-        cur = self._current_version(table)
-        new_dir = os.path.join(self.root, table, f"v={cur + 1}")
-        if os.path.isdir(new_dir):
-            shutil.rmtree(new_dir)
-        write_fn(new_dir)
-        ptr = os.path.join(self.root, table, "_CURRENT")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(cur + 1))
-        os.replace(tmp, ptr)  # atomic — readers see old or new, never neither
-        # retention: keep the newest SNAPSHOT_RETAIN generations (the
-        # default 2 = current + one prior, so readers planned against
-        # the old snapshot finish safely). Raising it enables
-        # time-travel reads over a deeper history (read_table_at).
-        keep_min = (cur + 1) - (self.SNAPSHOT_RETAIN - 1)
-        tdir = os.path.join(self.root, table)
-        for name in os.listdir(tdir):
-            if not name.startswith("v="):
-                continue
-            try:
-                v = int(name[2:])
-            except ValueError:
-                continue
-            if v < keep_min:
-                shutil.rmtree(os.path.join(tdir, name))
 
     # -- time travel ---------------------------------------------------------
     def snapshot_versions(self, table: str) -> list[int]:
-        """Readable versions of ``table``, oldest first. For a point
-        table these are COMMIT versions — every append, upsert,
-        optimize or delete — minus those whose files ``vacuum`` has
-        reclaimed. For the streams registry a version is cut at each
-        log compaction and ``SNAPSHOT_RETAIN`` generations are kept."""
-        if table in _POINT_TABLES:
-            return TL.readable_versions(self._point_root(table))
-        tdir = os.path.join(self.root, table)
-        if not os.path.isdir(tdir):
-            return []
-        out = []
-        for name in os.listdir(tdir):
-            if name.startswith("v="):
-                try:
-                    out.append(int(name[2:]))
-                except ValueError:
-                    pass
-        return sorted(out)
+        """Readable COMMIT versions of ``table``, oldest first — every
+        append, upsert, optimize, delete or compaction — minus those
+        whose files ``vacuum`` (or, for the streams registry, a later
+        compaction) has reclaimed."""
+        return TL.readable_versions(self._table_root(table))
 
     def read_table_at(self, table: str, version: int) -> DataFrame:
         """Read ``table`` as-of ``version`` (raw stored rows — for the
-        streams table that is the metadata log state at that snapshot).
-        Raises ``ValueError`` if the version was never cut or was
-        reclaimed by vacuum / retention."""
+        streams table that is the metadata log state at that commit).
+        Raises ``ValueError`` if the version was never committed or
+        its files were reclaimed."""
         have = self.snapshot_versions(table)
         if version not in have:
             raise ValueError(
                 f"{table} v{version} not in log (readable: {have})"
             )
-        if table in _POINT_TABLES:
-            return TL.txn_read(
-                self.spark, self._point_root(table), version=version
-            )
-        return self.spark.read.parquet(
-            os.path.join(self.root, table, f"v={version}")
+        if table == "streams":
+            return self.read_streams_log(version)
+        return TL.txn_read(
+            self.spark, self._table_root(table), version=version
         )
 
     # -- paths ---------------------------------------------------------------
-    def _point_root(self, table: str) -> str:
+    def _table_root(self, table: str) -> str:
         # a commit-log table's root is FIXED: versioning lives in the log
         return os.path.join(self.root, f"{table}_txn")
 
     @property
     def streams_path(self) -> str:
-        return self._data_dir("streams")
+        return self._table_root("streams")
 
     @property
     def points_raw_path(self) -> str:
-        return self._point_root("points_raw")
+        return self._table_root("points_raw")
 
     @property
     def points_derived_path(self) -> str:
-        return self._point_root("points_derived")
+        return self._table_root("points_derived")
 
     @property
     def points_agg_path(self) -> str:
-        return self._point_root("points_agg")
+        return self._table_root("points_agg")
 
     # -- external-table catalog (lakehouse interop by NAME) -----------
     @property
@@ -439,24 +365,28 @@ class Tables:
         self._v_counter = max(self._v_counter, v)
 
     # -- streams metadata (MERGE-style log) ----------------------------------
-    def read_streams_log(self) -> DataFrame:
-        path = self.streams_path
-        if not (
-            os.path.isdir(path)
-            and any(n.endswith(".parquet") for n in os.listdir(path))
-        ):
+    def read_streams_log(self, version: int | None = None) -> DataFrame:
+        root = self.streams_path
+        if not TL.is_txn_table(root):
             return local_rows_df(self.spark, [], STREAMS_LOG_SCHEMA)
-        return self.spark.read.schema(STREAMS_LOG_SCHEMA).parquet(path)
+        return TL.txn_read(
+            self.spark, root, schema=STREAMS_LOG_SCHEMA, version=version
+        )
+
+    def _live_log(self, version: int | None = None) -> DataFrame:
+        """The winning log row per stream_id (latest ``_v``), tombstones
+        out, still in STREAMS_LOG_SCHEMA shape."""
+        w = Window.partitionBy("stream_id").orderBy(F.col("_v").desc())
+        return (
+            self.read_streams_log(version)
+            .withColumn("_rk", F.row_number().over(w))
+            .filter((F.col("_rk") == 1) & ~F.coalesce("_deleted", F.lit(False)))
+            .drop("_rk")
+        )
 
     def read_streams(self) -> DataFrame:
         """Live stream rows: latest version per stream_id, tombstones out."""
-        log = self.read_streams_log()
-        w = Window.partitionBy("stream_id").orderBy(F.col("_v").desc())
-        return (
-            log.withColumn("_rk", F.row_number().over(w))
-            .filter((F.col("_rk") == 1) & ~F.coalesce("_deleted", F.lit(False)))
-            .drop("_rk", "_v", "_deleted")
-        )
+        return self._live_log().drop("_v", "_deleted")
 
     def upsert_streams(self, rows: list[dict]) -> None:
         """MERGE: append new row versions (full rows; latest _v wins).
@@ -470,50 +400,49 @@ class Tables:
             r["_v"] = v
             r.setdefault("_deleted", False)
             out.append(r)
-        df = local_rows_df(self.spark, out, STREAMS_LOG_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.streams_path)
-        self._maybe_compact_streams()
+        self._append_streams(local_rows_df(self.spark, out, STREAMS_LOG_SCHEMA))
 
     def upsert_streams_df(self, df: DataFrame) -> None:
         """MERGE from a DataFrame in STREAMS_SCHEMA shape — appends new row
         versions without any driver materialization."""
         v = self._next_v()
-        (
+        self._append_streams(
             df.select(*[f.name for f in STREAMS_SCHEMA.fields])
             .withColumn("_v", F.lit(v))
             .withColumn("_deleted", F.lit(False))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.streams_path)
         )
-        self._maybe_compact_streams()
 
-    def _maybe_compact_streams(self) -> None:
-        """Keep the append-only streams log bounded: once the current
-        version dir exceeds STREAMS_LOG_MAX_FILES parquet files, snapshot
-        the live rows into a fresh dir (atomic pointer swap). Amortized
-        O(live streams) every N upserts — without this, every metadata
-        read window-scans a log that grows with uptime.
-
-        SINGLE-WRITER ONLY: the snapshot swap captures the log as seen by
-        THIS process, so a second process appending to the streams log
-        concurrently would have its rows silently dropped by the swap —
-        the same writer-quiescence rule documented for ``vacuum`` applies
-        to every upsert while auto-compaction is enabled. Deployments
-        with multiple metadata writers must set
-        ``auto_compact_streams = False`` on every Tables instance and run
-        ``compact_streams()`` from one owning process during a quiesced
-        window (or use a transactional table format — Delta/Iceberg MERGE
-        — where this log is a real table)."""
-        if not self.auto_compact_streams:
-            return
-        path = self.streams_path
-        try:
-            n = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-        except FileNotFoundError:
-            return
-        if n > self.STREAMS_LOG_MAX_FILES:
-            self.compact_streams()
+    def _append_streams(self, df: DataFrame) -> None:
+        """Land registry row versions as one blind append commit (always
+        rebases, never conflicts), then compact once the snapshot holds
+        more than ``_STREAMS_COMPACT_AT`` live files — amortized
+        O(live streams) every N upserts; without it every metadata read
+        window-scans a log that grows with uptime. The commit records
+        no per-file stats: each file spans a batch's random stream ids,
+        so stats could prune nothing, and they would cost log bytes on
+        every upsert."""
+        root = self.streams_path
+        TL.init_table(root)
+        adds = TL.stage_files(
+            self.spark, df.coalesce(1), root, [], uuid.uuid4().hex[:12]
+        )
+        TL.commit(
+            root,
+            adds,
+            [],
+            "append",
+            [],
+            base_version=TL.latest_version(root),
+            writer="streams",
+            stats={},
+        )
+        if len(TL.snapshot(root)[1]) > _STREAMS_COMPACT_AT:
+            try:
+                self.compact_streams()
+            except TL.CommitConflictError:
+                # a rival upsert landed first: no row is lost, and the
+                # next upsert retries the compaction
+                pass
 
     def delete_streams_rows(self, stream_ids: list[str]) -> None:
         """Tombstone the given streams (latest version = deleted)."""
@@ -522,22 +451,32 @@ class Tables:
         )
 
     def compact_streams(self) -> None:
-        """Snapshot the live rows into a fresh version dir (atomic swap).
-        Pure DataFrame rewrite — the snapshot job reads the outgoing
-        version dir (still in place until the pointer swap) and writes the
-        new one, so compaction never materializes stream metadata on the
-        driver and scales to millions of streams."""
-        live = (
-            self.read_streams()
-            .withColumn("_v", F.lit(self._next_v()))
-            .withColumn("_deleted", F.lit(False))
-            .select(*[f.name for f in STREAMS_LOG_SCHEMA.fields])
+        """Collapse the registry to its live rows as ONE snapshot-isolated
+        ``overwrite`` commit against the snapshot it read. A rival
+        upsert landing in between makes it raise
+        ``txnlog.CommitConflictError`` — no row is lost; re-run it.
+        Pure DataFrame rewrite: compaction never materializes stream
+        metadata on the driver and scales to millions of streams. Live
+        rows keep their own ``_v``, so an upsert whose version was drawn
+        before this commit but lands after it still wins.
+
+        Disk stays bounded at two generations: once the commit lands,
+        the files the PREVIOUS compaction commit removed are deleted
+        (names taken from that commit, so no writer's staged in-flight
+        file can be hit); readers planned since then stay safe."""
+        base_ver, committed = self._snapshot("streams")
+        if not committed:
+            return
+        root = self.streams_path
+        live = self._live_log(base_ver).coalesce(1)
+        self._rewrite_partitions(
+            "streams", base_ver, committed, live, None, "streams_compact"
         )
-
-        def write(d):
-            live.coalesce(1).write.mode("overwrite").parquet(d)
-
-        self._swap_version("streams", write)
+        for v in range(base_ver, TL.fold_horizon(root) - 1, -1):
+            prev = TL._read_commit(root, v)
+            if prev["op"] == "overwrite":
+                delete_rel_files(root, prev["removes"])
+                break
 
     # -- point tables (commit log) ---------------------------------------------
     def _read_points(
@@ -546,7 +485,7 @@ class Tables:
         """A point table's snapshot at ``version`` (default latest) as
         ``schema``'s columns; an empty local frame before its first
         commit."""
-        root = self._point_root(table)
+        root = self._table_root(table)
         if not TL.is_txn_table(root):
             return local_rows_df(self.spark, [], schema)
         return TL.txn_read(self.spark, root, version=version).select(
@@ -557,8 +496,8 @@ class Tables:
         TL.txn_append(
             self.spark,
             df,
-            self._point_root(table),
-            _POINT_TABLES[table],
+            self._table_root(table),
+            _TABLES[table],
             writer=writer,
         )
 
@@ -581,8 +520,8 @@ class Tables:
         against (superseded files stay until ``txn_vacuum``); a rival
         commit in the same partitions since ``base_ver`` makes this
         raise ``txnlog.CommitConflictError`` and the caller re-runs."""
-        root = self._point_root(table)
-        parts = _POINT_TABLES[table]
+        root = self._table_root(table)
+        parts = _TABLES[table]
         if touched is None:
             removes = sorted(committed)
         else:
@@ -595,19 +534,30 @@ class Tables:
         adds = TL.stage_files(
             self.spark, rows, root, parts, uuid.uuid4().hex[:12]
         )
-        TL.commit(
-            root,
-            adds,
-            removes,
-            "overwrite",
-            [],
-            base_version=base_ver,
-            writer=writer,
-            stats=TL.collect_file_stats(root, adds, spark=self.spark),
-        )
+        try:
+            TL.commit(
+                root,
+                adds,
+                removes,
+                "overwrite",
+                [],
+                base_version=base_ver,
+                writer=writer,
+                # the registry records no stats (see _append_streams)
+                stats=(
+                    {}
+                    if table == "streams"
+                    else TL.collect_file_stats(root, adds, spark=self.spark)
+                ),
+            )
+        except TL.CommitConflictError:
+            # never committed, so no reader can see them: drop the
+            # staged files now instead of leaving them to txn_vacuum
+            delete_rel_files(root, adds)
+            raise
 
     def _snapshot(self, table: str) -> tuple[int, set[str]]:
-        root = self._point_root(table)
+        root = self._table_root(table)
         return TL.snapshot(root) if TL.is_txn_table(root) else (0, set())
 
     # -- raw points ------------------------------------------------------------
@@ -732,7 +682,7 @@ class Tables:
         if not committed:
             self.append_points_agg(df)
             return
-        parts = _POINT_TABLES["points_agg"]
+        parts = _TABLES["points_agg"]
         key = ["stream_id", "granularity", "bucket_ts"]
         existing = TL.txn_read(
             self.spark, self.points_agg_path, version=base_ver
@@ -781,7 +731,7 @@ class Tables:
             ("points_raw", self.read_points_raw),
             ("points_agg", self.read_points_agg),
         ):
-            root = self._point_root(table)
+            root = self._table_root(table)
             if not TL.is_txn_table(root):
                 continue
             dead = [

@@ -1,4 +1,4 @@
-"""Storage-layer behavior: streams-log auto-compaction and seq plumbing
+"""Storage-layer behavior: streams-registry auto-compaction and seq plumbing
 (SURVEY §1.3 / T4-T5 scale notes)."""
 
 from __future__ import annotations
@@ -9,6 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from django_datastream_spark import storage
+from django_datastream_spark import txnlog as TL
 from django_datastream_spark.storage import Tables
 from django_datastream_spark.streaming.ingest import _batch_seq_col
 
@@ -33,47 +35,36 @@ def _row(i: int) -> dict:
     }
 
 
-def test_streams_log_autocompacts_and_reads_stay_correct(spark, tmp_path):
-    """100 single-row upserts must not leave 100 log files behind: the log
-    auto-compacts past STREAMS_LOG_MAX_FILES, reads keep resolving the
-    latest version, and the version history collapses to the live set."""
+def _parquet_files(root: str) -> int:
+    return sum(
+        n.endswith(".parquet") for _d, _s, names in os.walk(root) for n in names
+    )
+
+
+def test_streams_log_autocompacts_and_reads_stay_correct(
+    spark, tmp_path, monkeypatch
+):
+    """40 single-row upserts must not leave 40 live log files behind: the
+    registry auto-compacts past _STREAMS_COMPACT_AT live files, reads
+    keep resolving the latest version, the version history collapses to
+    the live set, and disk keeps at most two generations."""
+    monkeypatch.setattr(storage, "_STREAMS_COMPACT_AT", 12)
     t = Tables(spark, str(tmp_path / "store"))
-    t.STREAMS_LOG_MAX_FILES = 12  # lower the knob so the test stays fast
     for i in range(40):
         t.upsert_streams([_row(i)])
-    n_files = sum(
-        1 for f in os.listdir(t.streams_path) if f.endswith(".parquet")
-    )
-    assert n_files <= t.STREAMS_LOG_MAX_FILES + 1
+    _, live_files = TL.snapshot(t.streams_path)
+    assert len(live_files) <= 12 + 1
+    assert _parquet_files(t.streams_path) <= 2 * (12 + 1)
     live = t.read_streams().collect()
     assert len(live) == 1
     # latest upsert wins after however many compactions happened
     assert live[0]["latest_ts"] == dt.datetime(2024, 1, 1) + dt.timedelta(seconds=39)
     # log itself is bounded too (live rows + post-compaction appends)
-    assert t.read_streams_log().count() <= t.STREAMS_LOG_MAX_FILES + 1
-
-
-def test_streams_log_auto_compaction_can_be_disabled(spark, tmp_path):
-    """Multi-writer deployments disable implicit compaction (single-writer
-    snapshot swap would drop a concurrent appender's rows): with the flag
-    off, upserts never swap the version dir, and an explicit
-    compact_streams() from the owning process still works."""
-    t = Tables(spark, str(tmp_path / "store"))
-    t.STREAMS_LOG_MAX_FILES = 4
-    t.auto_compact_streams = False
-    for i in range(12):
-        t.upsert_streams([_row(i)])
-    assert t._current_version("streams") == 0  # no implicit swap happened
-    live = t.read_streams().collect()
-    assert len(live) == 1
-    assert live[0]["latest_ts"] == dt.datetime(2024, 1, 1) + dt.timedelta(seconds=11)
-    t.compact_streams()  # explicit, from the quiesced owner
-    assert t._current_version("streams") == 1
-    n_files = sum(1 for f in os.listdir(t.streams_path) if f.endswith(".parquet"))
-    assert n_files == 1
-    assert t.read_streams().collect()[0]["latest_ts"] == dt.datetime(
-        2024, 1, 1
-    ) + dt.timedelta(seconds=11)
+    assert t.read_streams_log().count() <= 12 + 1
+    # an explicit compaction collapses the log to one file
+    t.compact_streams()
+    assert len(TL.snapshot(t.streams_path)[1]) == 1
+    assert t.read_streams().collect()[0]["latest_ts"] == live[0]["latest_ts"]
 
 
 def test_batch_seq_assignment_is_not_single_partition(spark):
@@ -169,57 +160,32 @@ def test_upsert_points_agg_appends_unless_keys_collide(spark, tmp_path):
 
 
 def test_time_travel_reads_prior_snapshot(spark, tmp_path):
-    """Snapshot retention + read_table_at on the streams registry (the
-    one table still on snapshot generations): each log compaction cuts
-    a version; retained versions read back exactly as of their cut,
-    versions never cut raise."""
+    """read_table_at on the streams registry: every upsert and every
+    compaction is a commit version; each reads back exactly the log
+    state as of that commit, versions never committed raise."""
     t = Tables(spark, str(tmp_path / "store"))
-    t.SNAPSHOT_RETAIN = 3
     t.upsert_streams([dict(_row(0), stream_id=f"s{i}") for i in range(5)])
-    # rewrite boundary #1: compaction cuts a new streams version
-    t.compact_streams()
-    v_after_first = t._current_version("streams")
-    assert t.read_table_at("streams", v_after_first).count() == 5
-
+    v_first = TL.latest_version(t.streams_path)
     t.upsert_streams([dict(_row(0), stream_id=f"s{i}") for i in range(5, 8)])
-    # rewrite boundary #2
     t.compact_streams()
-    v_now = t._current_version("streams")
-    assert v_now > v_after_first
-    # current snapshot has all 8 streams; the prior generation is
-    # retained — its compacted rows plus the upserts that landed in it
-    # before the next cut
-    assert t.read_streams().count() == 8
-    assert v_after_first in t.snapshot_versions("streams")
-    assert t.read_table_at("streams", v_after_first).count() == 8
-
-    # boundary #3 compacts tombstones away; v_now keeps its log state
-    # (8 compacted rows + the 3 tombstones that landed in it)
+    v_compacted = TL.latest_version(t.streams_path)
+    assert v_compacted > v_first
     t.delete_streams_rows(["s0", "s1", "s2"])
-    t.compact_streams()
-    assert t.read_streams().count() == 5
-    assert t.read_table_at("streams", v_now).count() == 11
-    assert t.snapshot_versions("streams") == [v_after_first, v_now, v_now + 1]
+    v_deleted = TL.latest_version(t.streams_path)
 
-    # a version never cut raises
+    assert t.read_table_at("streams", v_first).count() == 5
+    # the compaction collapsed 8 log rows into the 8 live streams
+    assert t.read_table_at("streams", v_compacted).count() == 8
+    # the tombstones landed on top of the compacted snapshot
+    assert t.read_table_at("streams", v_deleted).count() == 11
+    assert t.read_streams().count() == 5
+    assert {v_first, v_compacted, v_deleted} <= set(
+        t.snapshot_versions("streams")
+    )
+
+    # a version never committed raises
     with pytest.raises(ValueError):
         t.read_table_at("streams", 999)
-
-
-def test_snapshot_retention_vacuums_old_generations(spark, tmp_path):
-    """With the default SNAPSHOT_RETAIN=2, three rewrites leave exactly
-    the newest two generations on disk (reader-safety unchanged)."""
-    t = Tables(spark, str(tmp_path / "store"))
-    for i in range(3):
-        rows = [{"stream_id": f"s{i}", "title": f"t{i}", "v": i}]
-        df = spark.createDataFrame([(f"s{i}", f"t{i}", i)], "stream_id string, title string, v long")
-        t._swap_version("demo", lambda d, df=df: df.write.parquet(d))
-    vs = t.snapshot_versions("demo")
-    assert len(vs) == 2 and vs[-1] == t._current_version("demo")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        t.read_table_at("demo", vs[0] - 1)
 
 
 def test_local_rows_df_is_arrow_local_and_faithful(spark):

@@ -370,14 +370,17 @@ def test_derived_replace_is_one_overwrite_commit(engine):
 
 
 def test_refuses_plain_store(spark, tmp_path):
-    """A store left by the retired plain versioned-parquet layout would
-    read as empty; opening it raises instead, naming the table dir."""
+    """A store left by the retired plain versioned-parquet layout (the
+    point tables' or the streams registry's pointer-swap log) would read
+    as empty; opening it raises instead, naming the table dir."""
     for table, marker in (
+        ("streams", "_CURRENT"),
+        ("streams", "v=1"),
         ("points_raw", "_CURRENT"),
         ("points_agg", "v=0"),
         ("points_derived", "v=3"),
     ):
-        root = tmp_path / table
+        root = tmp_path / f"{table}-{marker}"
         plain = root / table
         plain.mkdir(parents=True)
         if marker == "_CURRENT":
