@@ -386,7 +386,7 @@ def merge_into(
                 target_path,
                 kept,
                 schema=TL.table_schema(target_path, base_ver),
-                dv=dvm,
+                deleted=TL._dv_frame(spark, target_path, kept, dvm),
                 where=kw,
                 keep_meta=True,
             )
@@ -485,7 +485,9 @@ def merge_into(
                 target_path,
                 sorted(conflict_rel),
                 schema=existing.schema,
-                dv=dv_map,
+                deleted=TL._dv_frame(
+                    spark, target_path, conflict_rel, dv_map
+                ),
             ).select(*existing.columns)
         else:
             conflicted = (

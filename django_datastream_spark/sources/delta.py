@@ -26,12 +26,14 @@ versions above 2 and reader table features beyond this module's
 support raise; ``delta.columnMapping.mode`` other than ``none``
 raises. DELETION VECTORS read: descriptors (inline / uuid-sidecar /
 absolute-path) decode through :mod:`.roaring` (portable
-RoaringBitmapArray, CRC-verified) and subtract as a
-``(__file, __pos)`` anti-join over parquet ``_metadata.row_index`` —
-the same shape as the engine's own ``txnlog`` DV read; unknown
-storage types and format versions still fail closed. Multi-part
-checkpoints are supported; a corrupt/unreadable checkpoint falls back
-to the pure-JSON fold (the log is self-sufficient).
+RoaringBitmapArray, CRC-verified, cardinality-checked) into one
+``(__file, __pos)`` positions frame, and the engine's own scan
+(``txnlog._read_files``) subtracts it by the same whole-scan
+anti-join over parquet ``_metadata.row_index`` as txn deletion
+vectors; unknown storage types and format versions still fail
+closed. Multi-part checkpoints are supported; a corrupt/unreadable
+checkpoint falls back to the pure-JSON fold (the log is
+self-sufficient).
 
 Scale notes (mirrors the engine's own txn fold design,
 ``txnlog.PARQUET_CHECKPOINT_AT`` / ``DISTRIBUTED_PRUNE_AT``): the
@@ -41,13 +43,16 @@ interval), so a 10⁵–10⁶-add snapshot resolves without materializing
 actions as driver Python objects; ``where=`` data skipping runs the
 txn log's per-file keep test, as a DISTRIBUTED Spark job above
 ``txnlog.DISTRIBUTED_PRUNE_AT`` files, so only SURVIVING adds return
-to the driver. The data scan is one ``parquet`` load per PARTITION VALUE
-COMBINATION when the layout is not hive-style, but Delta writers emit
-hive-style paths (``p=1/part-….parquet``), detected here and read as
-ONE scan with ``basePath`` so Spark derives partition columns itself.
+to the driver. The data scan is ONE ``txnlog._read_files`` load of
+the surviving files, the scan txn tables use: Delta writers emit
+hive-style paths (``p=1/part-….parquet``), detected here and read
+with ``basePath`` so Spark derives partition columns itself; any
+other layout takes them from ``partitionValues`` by a broadcast
+``__file`` join. Delta's own code is the translation into that scan
+(paths, positions frame, column-mapping rename, final projection).
 (One ``spark.read.parquet(*paths)`` call carries the surviving file
 list — fine to ~10⁵ paths; past that, prune harder or adopt the table
-into the txn layer, whose scan is built for it.)
+into the txn layer, whose fold and prune are built for it.)
 
 STORAGE REACH: every metadata read goes through the injectable
 FileIO seam (:mod:`.fileio` — scheme registry or explicit ``io=``;
@@ -77,7 +82,7 @@ import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .fileio import FileIO, io_for
 
@@ -621,10 +626,10 @@ def delta_snapshot_arrow(
                         {"protocol": proto},
                     )
                 start = cp + 1
-            except DeltaUnsupportedError:
-                raise
-            except Exception:
-                # corrupt checkpoint: the JSON log is self-sufficient
+            except (OSError, ValueError, pa.ArrowException):
+                # unreadable or undecodable checkpoint (corrupt bytes,
+                # malformed actions, missing sidecar): the JSON log is
+                # self-sufficient
                 proto = meta = cp_adds = None
                 start = 0
     # the fold range must be contiguous in the JSON log — a cleaned-up
@@ -703,14 +708,6 @@ def delta_schema(md: dict) -> StructType:
     return StructType.fromJson(json.loads(md["schemaString"]))
 
 
-def _file_path(root: str, rel: str, io: FileIO | None = None) -> str:
-    # add.path is URL-encoded and relative to the table root; the
-    # result feeds Spark's JVM scan, so translate through the data
-    # plane (identity for POSIX, bucket URI for object stores)
-    io = io or io_for(root)
-    return os.path.join(io.spark_path(root), urllib.parse.unquote(rel))
-
-
 # The spec stores add/remove/cdc paths as percent-encoded relative
 # URIs. Encode only what URI path syntax requires (space, '%', '?',
 # '#', brackets); everything Hadoop leaves literal stays literal so
@@ -742,6 +739,30 @@ def _hive_layout(
             elif got != want:
                 return False
     return True
+
+
+def _check_mirrorable(md: dict, adds, verb: str) -> None:
+    """Refuse a zero-copy txn mirror (adopt, refresh) of a snapshot
+    the txn layer cannot express: column mapping would expose
+    physical column names, and a partitioned layout that is not
+    hive-style would lose its partition columns."""
+    if _column_mapping(md):
+        raise DeltaUnsupportedError(
+            f"{verb} of a columnMapping table would expose physical "
+            "column names through the txn layer; read_delta + rewrite "
+            "instead"
+        )
+    part_cols = list(md.get("partitionColumns") or [])
+    if part_cols and not _hive_layout(
+        adds.column("path").to_pylist(),
+        [dict(x or []) for x in adds.column("partitionValues").to_pylist()],
+        part_cols,
+    ):
+        raise DeltaUnsupportedError(
+            f"{verb} of a non-hive-layout partitioned Delta table "
+            "would lose partition columns; read_delta + rewrite "
+            "instead"
+        )
 
 
 def read_delta(
@@ -953,16 +974,23 @@ def _physicalize_md(md: dict, mapping: dict) -> dict:
 
 
 def _scan_snapshot_arrow(spark, root: str, md: dict, adds) -> DataFrame:
-    """DV-aware scan of an Arrow add set: files without deletion
-    vectors take the plain scan; files WITH them scan once with row
-    identity (``_metadata.file_path``/``row_index``) and anti-join
-    their decoded positions — decode happens EXECUTOR-side, one task
-    per descriptor batch, so multi-GB vector sets never visit the
-    driver (mirror of ``txnlog._read_files``)."""
+    """An Arrow add set's rows through the one txn/Delta scan
+    (:func:`..txnlog._read_files`, whole-scan DV anti-join). What is
+    Delta's here is translation only: adds → decoded root-relative
+    paths plus one positions frame of their deletion vectors
+    (:func:`_dv_positions_frame`), the column-mapping rename, and one
+    final projection to the declared schema. Partition columns of a
+    hive layout come from the directories; of any other layout, from
+    ``partitionValues`` by a broadcast ``__file`` join after the one
+    scan (no directory becomes a column there)."""
     import pyarrow.compute as pc
+
+    from .. import txnlog as TL
+    from ..storage import local_rows_df
 
     mapping = _column_mapping(md)
     logical = [f.name for f in delta_schema(md).fields]
+    scanned = {c: c for c in logical}
     if mapping:
         part = set(md.get("partitionColumns") or [])
         if mapping["mode"] == "name":
@@ -979,61 +1007,79 @@ def _scan_snapshot_arrow(spark, root: str, md: dict, adds) -> DataFrame:
                 for c in logical
             }
         md = _physicalize_md(md, mapping)
-    dvc = adds.column("deletionVector").combine_chunks()
-    if dvc.null_count >= adds.num_rows:
-        df = _scan_adds_arrow(spark, root, md, adds)
-    else:
-        dirty_mask = pc.is_valid(dvc)
-        dirty = adds.filter(dirty_mask)
-        clean = adds.filter(pc.invert(dirty_mask))
-        df = _scan_with_dv(spark, root, md, dirty)
-        if clean.num_rows:
-            df = _scan_adds_arrow(spark, root, md, clean).unionByName(df)
-    if mapping:
-        df = df.select(
-            *[F.col(scanned[name]).alias(name) for name in logical]
-        )
-    return df
-
-
-def _scan_with_dv(spark, root: str, md: dict, dirty) -> DataFrame:
-    """Scan DV-carrying adds minus their deleted positions."""
     schema = delta_schema(md)
-    rels = dirty.column("path").to_pylist()
-    pvs = None
-    if md.get("partitionColumns"):
-        pvs = [
-            dict(x or [])
-            for x in dirty.column("partitionValues").to_pylist()
-        ]
-    base = _scan_paths(spark, root, md, rels, pvs, keep_meta=True)
-    deleted = _dv_positions_frame(spark, root, dirty)
-    out = base.join(deleted, ["__file", "__pos"], "left_anti")
-    return out.select(*[F.col(f.name) for f in schema.fields])
+    out = [
+        F.col(scanned[c]).alias(c) if scanned[c] != c else F.col(c)
+        for c in logical
+    ]
+    if not adds.num_rows:
+        return local_rows_df(spark, [], schema).select(*out)
+    part_cols = list(md.get("partitionColumns") or [])
+    raw = adds.column("path").to_pylist()
+    rels = [urllib.parse.unquote(r) for r in raw]
+    pvs = part_cols and [
+        dict(x or []) for x in adds.column("partitionValues").to_pylist()
+    ]
+    hive = bool(part_cols) and _hive_layout(raw, pvs, part_cols)
+    by_log = bool(part_cols) and not hive
+    data_cols = [f.name for f in schema.fields if f.name not in part_cols]
+    dvc = adds.column("deletionVector").combine_chunks()
+    deleted = None
+    if dvc.null_count < adds.num_rows:
+        deleted = _dv_positions_frame(
+            spark, root, adds.filter(pc.is_valid(dvc))
+        )
+    df = TL._read_files(
+        spark, root, rels,
+        # hive partition values type per the DECLARED schema
+        schema=StructType([schema[c] for c in data_cols]) if by_log
+        else schema,
+        deleted=deleted,
+        keep_meta=by_log,
+        hive=hive,
+    )
+    if by_log:
+        pv_df = local_rows_df(
+            spark,
+            [(r, *(pv.get(c) for c in part_cols)) for r, pv in zip(rels, pvs)],
+            StructType(
+                [StructField(c, StringType()) for c in ["__file", *part_cols]]
+            ),
+        )
+        df = df.drop("__pos").join(
+            F.broadcast(pv_df.select(
+                "__file",
+                *[F.col(c).cast(schema[c].dataType) for c in part_cols],
+            )),
+            "__file",
+        )
+    return df.select(*out)
 
 
 def _dv_positions_frame(spark, root: str, dirty) -> DataFrame:
     """Deleted (``__file``, ``__pos``) rows for DV-carrying adds. Only
     the DESCRIPTORS (a path + 4 ints each) leave the driver; the
-    bitmap bytes decode executor-side and each decode verifies the
-    descriptor's cardinality — a truncated or mismatched vector fails
-    the job instead of resurrecting rows."""
-    descs = []
-    for rel, dv in zip(
-        dirty.column("path").to_pylist(),
-        dirty.column("deletionVector").to_pylist(),
-    ):
-        descs.append(
-            (
-                urllib.parse.unquote(rel),
-                dv["storageType"],
-                dv["pathOrInlineDv"],
-                dv.get("offset"),
-                int(dv["sizeInBytes"]),
-                int(dv["cardinality"]) if dv.get("cardinality") is not None
-                else -1,
-            )
+    bitmap bytes decode executor-side, each checked against its
+    descriptor's cardinality (:func:`.roaring.dv_positions`).
+
+    Spark cannot size a Python-decoded frame, so it would plan a
+    sort-merge anti-join that shuffles the whole scan. The summed
+    cardinalities do size it: the frame is broadcast when that fits
+    the session's broadcast threshold, as a sized frame would be."""
+    descs = [
+        (
+            urllib.parse.unquote(rel),
+            dv["storageType"],
+            dv["pathOrInlineDv"],
+            dv.get("offset"),
+            int(dv["sizeInBytes"]),
+            dv.get("cardinality"),
         )
+        for rel, dv in zip(
+            dirty.column("path").to_pylist(),
+            dirty.column("deletionVector").to_pylist(),
+        )
+    ]
     # resolve DRIVER-side and capture: the scheme registry does not
     # exist in executor workers (the FileIO object itself is picklable)
     io = io_for(root)
@@ -1046,18 +1092,18 @@ def _dv_positions_frame(spark, root: str, dirty) -> DataFrame:
 
         from . import roaring as RB
 
-        frames = []
-        for f, st, p_, off, sz, card in descs:
-            pos = RB.dv_positions(root, st, p_, off, sz, io=io)
-            if card >= 0 and len(pos) != card:
-                raise ValueError(
-                    f"deletion vector for {f}: decoded {len(pos)} "
-                    f"positions, descriptor says {card}"
-                )
-            frames.append(
-                _pd.DataFrame({"__file": f, "__pos": pos.astype("int64")})
-            )
-        pdf = _pd.concat(frames, ignore_index=True)
+        pdf = _pd.concat(
+            [
+                _pd.DataFrame({
+                    "__file": f,
+                    "__pos": RB.dv_positions(root, *d, f, io=io).astype(
+                        "int64"
+                    ),
+                })
+                for f, *d in descs
+            ],
+            ignore_index=True,
+        )
         return spark.createDataFrame(pdf, "__file string, __pos long")
     ddf = spark.createDataFrame(
         descs, "f string, st string, p string, off int, sz int, card long"
@@ -1076,140 +1122,27 @@ def _dv_positions_frame(spark, root: str, dirty) -> DataFrame:
                 pos = RB.dv_positions(
                     root, st, p,
                     None if _pd.isna(off) else int(off), int(sz),
-                    io=io,
+                    None if _pd.isna(card) else int(card), f, io=io,
                 )
-                if card >= 0 and len(pos) != card:
-                    raise ValueError(
-                        f"deletion vector for {f}: decoded "
-                        f"{len(pos)} positions, descriptor says {card}"
-                    )
                 yield _pd.DataFrame(
                     {"__file": f, "__pos": pos.astype("int64")}
                 )
 
-    return ddf.mapInPandas(_explode, "__file string, __pos long")
-
-
-def _scan_adds_arrow(spark, root: str, md: dict, adds) -> DataFrame:
-    """Arrow-form entry to the shared scan: only the path column (and,
-    for partitioned tables, partitionValues) materializes — never
-    stats or the full actions."""
-    rels = adds.column("path").to_pylist()
-    pvs = None
-    if md.get("partitionColumns"):
-        pvs = [
-            dict(x or [])
-            for x in adds.column("partitionValues").to_pylist()
-        ]
-    return _scan_paths(spark, root, md, rels, pvs)
+    out = ddf.mapInPandas(_explode, "__file string, __pos long")
+    cap = spark._jsparkSession.sessionState().conf()
+    if all(c is not None for *_, c in descs) and sum(
+        c * (len(f) + 16) for f, *_, c in descs
+    ) <= cap.autoBroadcastJoinThreshold():
+        out = F.broadcast(out)
+    return out
 
 
 def _scan_adds(
     spark: SparkSession, root: str, md: dict, adds: list[dict]
 ) -> DataFrame:
-    """dict-form entry (per-commit tails in :func:`delta_changes`) —
-    routes through the DV-aware scan."""
+    """dict-form entry (per-commit tails in :func:`delta_changes`,
+    :func:`delta_cdf`, :func:`optimize_delta`) to the shared scan."""
     return _scan_snapshot_arrow(spark, root, md, _adds_from_dicts(adds))
-
-
-def _scan_paths(
-    spark: SparkSession, root: str, md: dict,
-    rels: list[str], pvs: list[dict] | None,
-    keep_meta: bool = False,
-) -> DataFrame:
-    """Scan a file list under the table's declared schema — the shared
-    data path of :func:`read_delta` / :func:`delta_changes`. One
-    ``spark.read.parquet(*paths)`` call carries the list (fine to
-    ~10⁵ paths; prune harder or adopt into the txn layer past that).
-    ``keep_meta=True`` appends the ``__file`` (table-relative path) /
-    ``__pos`` (row index) identity columns the deletion-vector
-    anti-join needs."""
-    io = io_for(root)
-    data_root = io.spark_path(root)
-    schema = delta_schema(md)
-    part_cols = list(md.get("partitionColumns") or [])
-    data_schema = StructType(
-        [f for f in schema.fields if f.name not in part_cols]
-    )
-    prefix = io.file_uri(root) + os.sep
-    meta_cols = (
-        [
-            # _metadata.file_path is a percent-encoded URI; DV
-            # descriptors carry the DECODED relative path. Decode the
-            # FULL path FIRST, then slice by the DECODED prefix —
-            # slicing the encoded form by a decoded prefix length
-            # mis-aligns whenever the table ROOT contains an
-            # encodable character (a space in a parent dir) and the
-            # anti-join would silently resurrect deleted rows.
-            # url_decode maps '+' to space (form semantics); a
-            # literal '+' in a file URI is unencoded — protect it.
-            F.expr(
-                "substring(url_decode(replace(_metadata.file_path, "
-                f"'+', '%2B')), {len(prefix) + 1})"
-            ).alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-        ]
-        if keep_meta
-        else []
-    )
-    if not rels:
-        from ..storage import local_rows_df
-
-        out_schema = schema
-        if keep_meta:
-            out_schema = StructType(
-                schema.fields
-                + [
-                    StructType.fromDDL(
-                        "__file string, __pos long"
-                    ).fields[0],
-                    StructType.fromDDL(
-                        "__file string, __pos long"
-                    ).fields[1],
-                ]
-            )
-        return local_rows_df(spark, [], out_schema)
-    paths = [_file_path(root, r, io) for r in rels]
-    if not part_cols:
-        return spark.read.schema(data_schema).parquet(*paths).select(
-            *[F.col(f.name) for f in schema.fields], *meta_cols
-        )
-    if _hive_layout(rels, pvs, part_cols):
-        # one scan; Spark derives partition columns from the dirs.
-        # partition values type per the DECLARED schema, not inference
-        df = (
-            spark.read.option("basePath", data_root)
-            .schema(schema)
-            .parquet(*paths)
-        )
-        return df.select(
-            *[F.col(f.name) for f in schema.fields], *meta_cols
-        )
-    # non-hive layout: partitionValues is the only truth — group files
-    # by their value combination (metadata-bounded) and union
-    by_combo: dict[tuple, list[str]] = {}
-    for pv, p in zip(pvs, paths):
-        key = tuple(pv.get(c) for c in part_cols)
-        by_combo.setdefault(key, []).append(p)
-    pieces = []
-    for key, group in sorted(by_combo.items()):
-        df = spark.read.schema(data_schema).parquet(*group)
-        for c, raw in zip(part_cols, key):
-            typ = schema[c].dataType
-            df = df.withColumn(
-                c,
-                F.lit(raw).cast(typ) if raw is not None
-                else F.lit(None).cast(typ),
-            )
-        pieces.append(
-            df.select(
-                *[F.col(f.name) for f in schema.fields], *meta_cols
-            )
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def delta_versions(root: str) -> list[int]:
@@ -1441,25 +1374,9 @@ def adopt_delta(
         )
     a_io = io_for(delta_root)
     _v, md, adds = delta_snapshot_arrow(delta_root, version)
-    if _column_mapping(md):
-        raise DeltaUnsupportedError(
-            "adopt of a columnMapping table would expose physical "
-            "column names through the txn layer; read_delta + rewrite "
-            "instead"
-        )
+    _check_mirrorable(md, adds, "adopt")
     part_cols = list(md.get("partitionColumns") or [])
     raw_rels = adds.column("path").to_pylist()
-    if part_cols:
-        pvs = [
-            dict(x or [])
-            for x in adds.column("partitionValues").to_pylist()
-        ]
-        if not _hive_layout(raw_rels, pvs, part_cols):
-            raise DeltaUnsupportedError(
-                "adopt of a non-hive-layout partitioned Delta table "
-                "would lose partition columns; read_delta + rewrite "
-                "instead"
-            )
     if TL.is_txn_table(txn_root):
         raise ValueError(f"{txn_root}: already a txn table")
     rels = [urllib.parse.unquote(r) for r in raw_rels]
@@ -1559,25 +1476,9 @@ def refresh_adopt_delta(
     require_mirror(root, _MIRROR_OPS_DELTA, "delta")
     a_io = io_for(root)
     _v, md, adds = delta_snapshot_arrow(root, version)
-    if _column_mapping(md):
-        raise DeltaUnsupportedError(
-            "refresh of a columnMapping table would expose physical "
-            "column names through the txn layer; read_delta + rewrite "
-            "instead"
-        )
+    _check_mirrorable(md, adds, "refresh")
     part_cols = list(md.get("partitionColumns") or [])
     raw_rels = adds.column("path").to_pylist()
-    if part_cols:
-        pvs = [
-            dict(x or [])
-            for x in adds.column("partitionValues").to_pylist()
-        ]
-        if not _hive_layout(raw_rels, pvs, part_cols):
-            raise DeltaUnsupportedError(
-                "refresh of a non-hive-layout partitioned Delta table "
-                "would lose partition columns; read_delta + rewrite "
-                "instead"
-            )
     # current Delta DV position sets (driver-side, bounded by DV
     # cardinality — the publish-side bound)
     dv_now: dict[str, set] = {}
@@ -1587,20 +1488,17 @@ def refresh_adopt_delta(
         if not dv:
             continue
         dv = dict(dv) if not isinstance(dv, dict) else dv
+        card = dv.get("cardinality")
         pos = RB.dv_positions(
             root,
             dv["storageType"],
             dv["pathOrInlineDv"],
             dv.get("offset"),
             int(dv["sizeInBytes"]),
+            None if card is None else int(card),
+            raw,
             io=a_io,
         )
-        card = dv.get("cardinality")
-        if card is not None and len(pos) != int(card):
-            raise ValueError(
-                f"deletion vector for {raw}: decoded {len(pos)} "
-                f"positions, descriptor says {card}"
-            )
         dv_now[urllib.parse.unquote(raw)] = {int(p) for p in pos}
     rels = {urllib.parse.unquote(r) for r in raw_rels}
     schema_now = (
@@ -2284,12 +2182,10 @@ def delta_cdf(
                 ):
                     removes_v = True
         if cdc_v:
-            # the cdc files ARE the commit's change description
-            df = _scan_paths(
-                spark, root, cdf_md,
-                [c["path"] for c in cdc_v],
-                [c.get("partitionValues") or {} for c in cdc_v],
-            )
+            # the cdc files ARE the commit's change description (under
+            # column mapping ``_change_type`` has no physical name, so
+            # the scan fails closed instead of reading nulls)
+            df = _scan_adds(spark, root, cdf_md, cdc_v)
         elif removes_v or dv_v:
             raise ValueError(
                 f"{root}: commit {v} deletes/rewrites rows but wrote "

@@ -488,18 +488,7 @@ class DeltaTableStreamReader(DataSourceStreamReader):
             os.path.join(self._io.spark_path(self.path), rel)
         )
         if dv_t is not None:
-            st, p, off, sz, card = dv_t
-            dead = RB.dv_positions(
-                self.path, st, p, off, sz, io=self._io
-            )
-            # fail closed, matching the batch read's contract
-            # (_dv_positions_frame): a truncated or mismatched vector
-            # must kill the job, never stream dead rows as live
-            if len(dead) != card:
-                raise ValueError(
-                    f"{rel}: deletion vector decoded {len(dead)} "
-                    f"positions, descriptor says {card}"
-                )
+            dead = RB.dv_positions(self.path, *dv_t, rel, io=self._io)
             if len(dead) and int(dead.max()) >= tbl.num_rows:
                 raise ValueError(
                     f"{rel}: deletion vector position {int(dead.max())} "

@@ -220,16 +220,14 @@ def _files_carry_field_ids(
     parquet field ids (the spec requires them); files adopted from
     this engine's own write path don't. Field-id matching only
     engages when the files actually carry ids — an id-less file under
-    an id-keyed schema would read as nulls."""
+    an id-keyed schema would read as nulls. A footer read error
+    propagates: answering False would fall back to name matching and
+    read a renamed column as nulls."""
     import pyarrow.parquet as pq
 
     for p in sorted(paths)[:1]:
-        try:
-            src = io.parquet_source(p) if io is not None else p
-            sch = pq.ParquetFile(src).schema_arrow
-        except Exception:
-            return False
-        for f in sch:
+        src = io.parquet_source(p) if io is not None else p
+        for f in pq.ParquetFile(src).schema_arrow:
             if f.metadata and b"PARQUET:field_id" in f.metadata:
                 return True
     return False
@@ -555,12 +553,16 @@ def read_iceberg(
     apply for real: delete parquets read as a normal Spark scan, the
     spec's sequence-number rule (a delete applies to data files whose
     sequence number is ≤ the delete's) enforced through a broadcast
-    of the metadata-bounded per-file map, and the rows subtracted as
-    a (file, pos) anti-join over ``_metadata.row_index`` — the same
-    shape as the Delta DV and txnlog reads. Equality deletes fail
-    closed. ``as_of_timestamp_ms`` pins AS OF TIMESTAMP (mutually
-    exclusive with ``snapshot_id``; resolution per
+    of the metadata-bounded per-file map, and the rows subtracted by
+    the row identity and anti-join the txn and Delta scans use
+    (``txnlog._row_identity`` over the full decoded file URI — the
+    file list stays Iceberg's own, of absolute URIs — and
+    ``txnlog._drop_deleted``). Equality deletes apply null-safe under
+    the strict sequence rule. ``as_of_timestamp_ms`` pins AS OF
+    TIMESTAMP (mutually exclusive with ``snapshot_id``; resolution per
     :func:`iceberg_snapshot_at`)."""
+    from .. import txnlog as TL
+
     if as_of_timestamp_ms is not None:
         if snapshot_id is not None:
             raise ValueError(
@@ -592,17 +594,10 @@ def read_iceberg(
         scan_schema = schema
     df = spark.read.schema(scan_schema).parquet(*files)
     if dels:
-        base = df.select(
-            "*",
-            # row identity: the FULL decoded file URI (a path with a
-            # space/'%' must still match; URI roots — s3a://, file://
-            # — must not break prefix arithmetic). The join side
-            # canonicalizes through FileIO.file_uri.
-            F.expr(
-                "url_decode(replace(_metadata.file_path, '+', '%2B'))"
-            ).alias("__af"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
+        # row identity: the FULL decoded file URI (delete files name
+        # absolute paths; the join side canonicalizes through
+        # FileIO.file_uri)
+        base = TL._row_identity(df, "")
         seq_rows = [
             (raw, io.file_uri(_resolve(root, md, raw)), int(q))
             for raw, q in data.items()
@@ -634,11 +629,11 @@ def read_iceberg(
                 )
                 .filter(F.col("dseq") >= F.col("fseq"))
                 .select(
-                    F.col("af").alias("__af"),
+                    F.col("af").alias("__file"),
                     F.col("pos").alias("__pos"),
                 )
             )
-            base = base.join(hits, ["__af", "__pos"], "left_anti")
+            base = TL._drop_deleted(base, hits)
         if eq_dels:
             # EQUALITY deletes: a row is deleted when its values in
             # the delete's equality columns match a delete row (null
@@ -652,11 +647,11 @@ def read_iceberg(
             base = base.join(
                 F.broadcast(
                     seqdf.select(
-                        F.col("af").alias("__af"),
+                        F.col("af").alias("__file"),
                         F.col("fseq").alias("__fseq"),
                     )
                 ),
-                "__af",
+                "__file",
             )
             by_cols: dict = {}
             for _k, raw, dseq, eq in eq_dels:
@@ -695,8 +690,6 @@ def read_iceberg(
                 base = base.join(ed, cond, "left_anti")
         df = base.select(*[F.col(f.name) for f in schema.fields])
     if where:
-        from .. import txnlog as TL
-
         df = TL._residual(df, TL._norm_where(where))
     return df.select(
         *[F.col(f.name) for f in schema.fields]

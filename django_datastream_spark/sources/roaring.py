@@ -344,20 +344,29 @@ def make_uuid_descriptor_path(u: _uuid.UUID, prefix: str = "") -> str:
 
 def dv_positions(
     root: str, storage_type: str, path_or_inline: str,
-    offset: int | None, size_in_bytes: int, io=None,
+    offset: int | None, size_in_bytes: int, cardinality: int | None,
+    file: str, io=None,
 ) -> np.ndarray:
-    """Decode one descriptor to its deleted row positions. ``io`` is
+    """Decode one descriptor of data file ``file`` to its deleted row
+    positions, checked against the descriptor's ``cardinality`` (None:
+    not recorded). The descriptor is external input: a truncated or
+    mismatched vector raises instead of resurrecting rows. ``io`` is
     the FileIO serving sidecar reads — EXECUTOR-side callers must pass
     the driver-resolved instance (the scheme registry is driver-local)."""
     if storage_type == "i":
-        data = z85_decode(path_or_inline)[:size_in_bytes]
-        return decode_dv_data(data)
-    if storage_type == "u":
-        path = os.path.join(root, dv_relative_path(path_or_inline))
-    elif storage_type == "p":
+        pos = decode_dv_data(z85_decode(path_or_inline)[:size_in_bytes])
+    elif storage_type in ("u", "p"):
         path = path_or_inline
+        if storage_type == "u":
+            path = os.path.join(root, dv_relative_path(path_or_inline))
+        pos = read_dv_file(path, offset or 1, size_in_bytes, io=io)
     else:
         raise ValueError(
             f"deletion vector storageType {storage_type!r} unsupported"
         )
-    return read_dv_file(path, offset or 1, size_in_bytes, io=io)
+    if cardinality is not None and len(pos) != cardinality:
+        raise ValueError(
+            f"deletion vector for {file}: decoded {len(pos)} "
+            f"positions, descriptor says {cardinality}"
+        )
+    return pos

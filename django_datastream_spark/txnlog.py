@@ -1076,7 +1076,10 @@ def collect_file_stats(
 
 def _merge_col_stats(cur: dict | None, new: dict | None) -> dict | None:
     """Fold one row group's column stats into the file accumulator.
-    ``None`` poisons (some row group was unusable → not prunable)."""
+    ``None`` poisons (some row group was unusable → not prunable). A
+    NaN bound (parquet-mr records ``max=NaN``) survives the fold —
+    Python's ``min``/``max`` would drop it or keep it by argument
+    order — and proves nothing in :func:`_stat_keeps`."""
     if new is None:
         return None
     if cur is None:
@@ -1095,10 +1098,14 @@ def _merge_col_stats(cur: dict | None, new: dict | None) -> dict | None:
         return {**cur, "nulls": nulls}
     if cur["t"] != new["t"]:
         return None
+
+    def pick(f, a, b):
+        return a if a != a else b if b != b else f(a, b)  # NaN wins
+
     return {
         "t": cur["t"],
-        "min": min(cur["min"], new["min"]),
-        "max": max(cur["max"], new["max"]),
+        "min": pick(min, cur["min"], new["min"]),
+        "max": pick(max, cur["max"], new["max"]),
         "nulls": nulls,
     }
 
@@ -1132,16 +1139,24 @@ def _as_bound(bound, tag: str):
 def _stat_keeps(s: dict | None, lo, hi) -> bool:
     """Conservative intersection test of one column's tagged stats
     with ``lo <= col <= hi``: False only when they PROVE no row of
-    the file satisfies it."""
+    the file satisfies it.
+
+    NaN, one rule for every log: Spark orders NaN above every number,
+    while footers (pyarrow) and Iceberg bounds leave NaN out of a
+    float max. So a float max below ``lo`` proves a miss only when a
+    numeric ``hi`` also rules NaN rows out; a NaN bound compares
+    False and proves nothing."""
     if s is None or lo is None and hi is None:
         return True
     if s["t"] == "null":
         return False  # every value NULL; comparisons never match
-    lo_c = _as_bound(lo, s["t"])
-    if lo_c is not None and s.get("max") is not None and s["max"] < lo_c:
+    lo_c, hi_c = _as_bound(lo, s["t"]), _as_bound(hi, s["t"])
+    mx, mn = s.get("max"), s.get("min")
+    if lo_c is not None and mx is not None and mx < lo_c and (
+        not isinstance(mx, float) or hi_c is not None and hi_c == hi_c
+    ):
         return False
-    hi_c = _as_bound(hi, s["t"])
-    if hi_c is not None and s.get("min") is not None and s["min"] > hi_c:
+    if hi_c is not None and mn is not None and mn > hi_c:
         return False
     return True
 
@@ -1954,6 +1969,55 @@ def stage_files(
     return out
 
 
+def _row_identity(df: DataFrame, prefix: str) -> DataFrame:
+    """``df`` plus the row identity every deletion read and writer
+    keys on — txn vectors, Delta DVs, Iceberg position deletes:
+    ``__file``, the file's DECODED ``_metadata.file_path`` with
+    ``prefix`` (a decoded root URI plus separator; ``""`` keeps the
+    full URI) sliced off, and ``__pos``, its ``_metadata.row_index``.
+
+    ``_metadata.file_path`` is percent-encoded, while vectors and
+    commit delete-maps key on raw paths (file or hive-dir names may
+    carry spaces or '%'). Decode the FULL path, then slice by the
+    decoded prefix: encoded-slice arithmetic mis-aligns when the root
+    itself holds an encodable character. '+' is literal in a file
+    URI; protect it from url_decode's form semantics."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        "*",
+        F.expr(
+            "substring(url_decode(replace(_metadata.file_path, "
+            f"'+', '%2B')), {len(prefix) + 1})"
+        ).alias("__file"),
+        F.col("_metadata.row_index").alias("__pos"),
+    )
+
+
+def _drop_deleted(df: DataFrame, deleted: DataFrame) -> DataFrame:
+    """The rows of ``df`` (carrying :func:`_row_identity`) whose
+    ``(__file, __pos)`` is not in ``deleted``. Positions stay
+    executor-side end to end: AQE broadcasts the deleted side when it
+    fits, without forcing a broadcast a 100 TB vector set would
+    overflow."""
+    return df.join(deleted, ["__file", "__pos"], "left_anti")
+
+
+def _dv_frame(spark, table_root: str, rels, dv) -> DataFrame | None:
+    """The deleted ``(__file, __pos)`` rows of ``rels`` under txn
+    deletion-vector entries ``dv`` (file → entries), read from their
+    ``_dv`` sidecars; None when no file of ``rels`` carries one."""
+    from pyspark.sql import functions as F
+
+    sidecars = sorted({e["dv"] for f in rels for e in (dv or {}).get(f, [])})
+    if not sidecars:
+        return None
+    sroot = _io(table_root).spark_path(_root(table_root))
+    return spark.read.parquet(
+        *(os.path.join(sroot, s) for s in sidecars)
+    ).select(F.col("file").alias("__file"), F.col("pos").alias("__pos"))
+
+
 def _read_files(
     spark: SparkSession,
     table_root: str,
@@ -1961,62 +2025,37 @@ def _read_files(
     schema=None,
     merge_schema: bool = False,
     where: dict[str, tuple] | None = None,
-    dv: dict[str, list] | None = None,
+    deleted: DataFrame | None = None,
     keep_meta: bool = False,
+    hive: bool = True,
 ) -> DataFrame:
-    """The one scan primitive: read exactly ``rels``, subtract any
-    deletion vectors (anti-join against the sidecar position files —
-    positions stay executor-side end to end; the join side is small
-    relative to the data and AQE broadcasts it when it fits, without
-    forcing a broadcast that a 100 TB vector set would overflow),
-    then apply residual ``where`` ranges. ``keep_meta=True`` keeps
-    the ``__file``/``__pos`` identity columns (what txn_delete needs
-    to record new vectors)."""
-    from pyspark.sql import functions as F
-
+    """The one scan of txn and Delta tables: read exactly ``rels``
+    (raw root-relative paths), subtract the ``deleted`` positions
+    frame (txn: :func:`_dv_frame`; Delta: its decoded descriptors) by
+    :func:`_drop_deleted` over the whole scan, then apply residual
+    ``where`` ranges. ``keep_meta=True`` keeps the ``__file``/``__pos``
+    identity columns (what txn_delete needs to record new vectors).
+    With neither, the plan is the bare parquet relation. ``hive``:
+    ``k=v`` directories under the root become columns (``basePath``);
+    False for a Delta layout whose partition values live only in its
+    log (Spark rejects mixed ``k=v`` and plain directories under one
+    ``basePath``)."""
     root = _root(table_root)
     io = _io(table_root)
     sroot = io.spark_path(root)
-    r = spark.read.option("basePath", sroot)
+    r = spark.read.option("basePath", sroot) if hive else spark.read
     if merge_schema:
         r = r.option("mergeSchema", "true")
     if schema is not None:
         r = r.schema(schema)
     df = r.parquet(*(os.path.join(sroot, f) for f in rels))
-    if where:
-        where = _norm_where(where)
-    sidecars = sorted(
-        {e["dv"] for f in rels for e in (dv or {}).get(f, [])}
-    )
-    if sidecars or keep_meta:
-        prefix = io.file_uri(root) + os.sep
-        df = df.select(
-            "*",
-            # _metadata.file_path is percent-encoded; decode so
-            # __file IS the raw relative path — DV sidecars persist
-            # this value and commit delete-maps key on it, so it must
-            # match the live set's raw rel paths even when file or
-            # hive-dir names carry spaces/'%'. '+' is unencoded in a
-            # file URI; protect it from url_decode's form semantics.
-            # decode the FULL path, then slice by the decoded
-            # prefix — encoded-slice arithmetic mis-aligns when the
-            # table ROOT itself contains an encodable character
-            F.expr(
-                "substring(url_decode(replace(_metadata.file_path, "
-                f"'+', '%2B')), {len(prefix) + 1})"
-            ).alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-    if sidecars:
-        dvdf = spark.read.parquet(
-            *(os.path.join(sroot, s) for s in sidecars)
-        ).select(
-            F.col("file").alias("__file"), F.col("pos").alias("__pos")
-        )
-        df = df.join(dvdf, ["__file", "__pos"], "left_anti")
-    if sidecars and not keep_meta:
-        df = df.drop("__file", "__pos")
-    return _residual(df, where) if where else df
+    if deleted is not None or keep_meta:
+        df = _row_identity(df, io.file_uri(root) + os.sep)
+    if deleted is not None:
+        df = _drop_deleted(df, deleted)
+        if not keep_meta:
+            df = df.drop("__file", "__pos")
+    return _residual(df, _norm_where(where)) if where else df
 
 
 def txn_read(
@@ -2055,7 +2094,6 @@ def txn_read(
         where = _norm_where(where)
         tbl = _prune_fold(spark, table_root, tbl, where)
     files = sorted(tbl.column("rel").to_pylist())
-    dv = _dv_from_arrow(tbl)
     if not files:
         if schema is None:
             raise ValueError(
@@ -2071,7 +2109,7 @@ def txn_read(
         schema=schema,
         merge_schema=merge_schema,
         where=where,
-        dv=dv,
+        deleted=_dv_frame(spark, table_root, files, _dv_from_arrow(tbl)),
         keep_meta=keep_meta,
     )
 
@@ -2116,7 +2154,7 @@ def txn_delete(
         table_root,
         files,
         schema=table_schema(table_root),
-        dv=dv,
+        deleted=_dv_frame(spark, table_root, files, dv),
         keep_meta=True,
     )
     hits = df.filter(condition).select("__file", "__pos")
@@ -2367,7 +2405,7 @@ def txn_update(
         table_root,
         files,
         schema=table_schema(table_root),
-        dv=dv,
+        deleted=_dv_frame(spark, table_root, files, dv),
         keep_meta=True,
     )
     hits = df.filter(condition)
@@ -2619,7 +2657,8 @@ def txn_count(
         # the range edge cuts through these files: scan them with the
         # predicate pushed down and deletion vectors applied
         total += _read_files(
-            spark, table_root, boundary, where=where, dv=dv
+            spark, table_root, boundary, where=where,
+            deleted=_dv_frame(spark, table_root, boundary, dv),
         ).count()
     return total
 
@@ -2713,7 +2752,8 @@ def txn_optimize(
     cand, total = plan
     part_cols = _partition_cols_of(cand)
     df = _read_files(
-        spark, table_root, cand, schema=table_schema(table_root), dv=dv
+        spark, table_root, cand, schema=table_schema(table_root),
+        deleted=_dv_frame(spark, table_root, cand, dv),
     )
     out = _compaction_layout(
         df, part_cols, zorder_by, total, target_file_bytes, len(cand)
@@ -3202,8 +3242,6 @@ def txn_changes(
         schema = table_schema(table_root)
     from pyspark.sql import functions as F
 
-    root = _root(table_root)
-    sroot = _io(table_root).spark_path(root)
     parts = []
     for v in range(from_version + 1, to_v + 1):
         c = _read_commit(table_root, v)
@@ -3224,13 +3262,12 @@ def txn_changes(
             # (reinstated deletion state of re-added files): those rows
             # are not live at this version and must not stream as
             # inserts — subtract them in-plan
-            own_dv = {f: deletes[f] for f in c["adds"] if f in deletes}
             df = _read_files(
                 spark,
                 table_root,
                 list(c["adds"]),
                 schema=schema,
-                dv=own_dv or None,
+                deleted=_dv_frame(spark, table_root, c["adds"], deletes),
             )
             if change_types:
                 df = df.withColumn("_change_type", F.lit(add_type))
@@ -3247,17 +3284,10 @@ def txn_changes(
                 "update_preimage" if c["op"] == "update" else "delete"
             )
             touched = sorted(true_deletes)
-            sidecars = sorted(
-                {e["dv"] for es in true_deletes.values() for e in es}
-            )
             raw = _read_files(
                 spark, table_root, touched, schema=schema, keep_meta=True
             )
-            dvdf = spark.read.parquet(
-                *(os.path.join(sroot, s) for s in sidecars)
-            ).select(
-                F.col("file").alias("__file"), F.col("pos").alias("__pos")
-            )
+            dvdf = _dv_frame(spark, table_root, touched, true_deletes)
             pre = (
                 raw.join(dvdf, ["__file", "__pos"], "left_semi")
                 .drop("__file", "__pos")
@@ -3274,16 +3304,15 @@ def txn_changes(
             # inserts of the surviving rows; an overwrite is a true
             # retraction, so it must say so.)
             _, _, dv_prev = _fold(table_root, v - 1)
-            prev_dv = {
-                f: dv_prev[f] for f in c["removes"] if dv_prev.get(f)
-            }
             rm = (
                 _read_files(
                     spark,
                     table_root,
                     list(c["removes"]),
                     schema=schema,
-                    dv=prev_dv or None,
+                    deleted=_dv_frame(
+                        spark, table_root, c["removes"], dv_prev
+                    ),
                 )
                 .withColumn("_change_type", F.lit("delete"))
                 .withColumn("_commit_version", F.lit(v).cast("long"))

@@ -163,6 +163,11 @@ def test_read_delta_applies_deletion_vectors(spark, tmp_path, storage):
         r["doc_id"]
         for r in DL.read_delta(spark, root, version=1).collect()
     ) == [0, 2, 4, 5, 6, 7, 8, 9]
+    # small vectors: the positions frame is sized from the descriptors'
+    # cardinalities and broadcast, so the scan itself is not shuffled
+    plan = DL.read_delta(spark, root)._jdf.queryExecution().executedPlan()
+    assert "BroadcastHashJoin" in plan.toString(), plan.toString()
+    assert "SortMergeJoin" not in plan.toString(), plan.toString()
 
 
 def test_dv_survives_checkpoint(spark, tmp_path):
@@ -181,22 +186,33 @@ def test_dv_survives_checkpoint(spark, tmp_path):
     ) == before
 
 
-def test_dv_with_partitions_and_where(spark, tmp_path):
+@pytest.mark.parametrize(
+    "f0,f1",
+    [
+        ("part=0/f0.parquet", "part=1/f1.parquet"),
+        # non-hive: partition values live only in the log — one file
+        # sits in a directory naming the WRONG partition, one in a
+        # plain directory
+        ("part=1/f0.parquet", "flat/f1.parquet"),
+    ],
+    ids=["hive", "non-hive"],
+)
+def test_dv_with_partitions_and_where(spark, tmp_path, f0, f1):
     """DV'd and clean files mix in one partitioned snapshot; data
     skipping composes with the anti-join."""
     root = str(tmp_path / "t")
     even = [0, 2, 4, 6, 8]
     odd = [1, 3, 5, 7, 9]
-    _write_data(root, "part=0/f0.parquet", even)
-    _write_data(root, "part=1/f1.parquet", odd)
+    _write_data(root, f0, even)
+    _write_data(root, f1, odd)
     DL.write_delta_commit(
         root, 0,
         [_PROTO, _meta(),
-         _add("part=0/f0.parquet", {"part": "0"}),
-         _add("part=1/f1.parquet", {"part": "1"})],
+         _add(f0, {"part": "0"}),
+         _add(f1, {"part": "1"})],
     )
     # delete positions 0 and 4 of the odd file (ids 1 and 9)
-    acts = _dv_commit_actions(root, "part=1/f1.parquet", [0, 4], "u")
+    acts = _dv_commit_actions(root, f1, [0, 4], "u")
     acts[1]["add"]["partitionValues"] = {"part": "1"}
     DL.write_delta_commit(root, 1, acts)
     got = sorted(

@@ -182,16 +182,12 @@ def test_iceberg_reads_via_object_store(spark, fake_store):
     assert want == got and want
 
 
-def test_iceberg_position_deletes_and_distributed_decode_via_store(
-    spark, fake_store, monkeypatch
-):
-    """Forces the DISTRIBUTED manifest decode (mapInPandas) over a
-    fake:// root: manifest Avro reads inside executor tasks must use
-    the captured FileIO."""
+def _build_iceberg_pos_delete_table(posix):
+    """One snapshot: data A (ids 0-4) and B (ids 5-9), and a position
+    delete of A's rows 0 and 2 — live ids 1, 3-9."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    _store, posix, fake = fake_store
     _data(posix, "data/A.parquet", range(0, 5))
     _data(posix, "data/B.parquet", range(5, 10))
     pq.write_table(
@@ -220,6 +216,16 @@ def test_iceberg_position_deletes_and_distributed_decode_via_store(
         [{"snapshot-id": 1, "manifest-list": "metadata/snap-1.avro"}],
         current_snapshot_id=1,
     )
+
+
+def test_iceberg_position_deletes_and_distributed_decode_via_store(
+    spark, fake_store, monkeypatch
+):
+    """Forces the DISTRIBUTED manifest decode (mapInPandas) over a
+    fake:// root: manifest Avro reads inside executor tasks must use
+    the captured FileIO."""
+    _store, posix, fake = fake_store
+    _build_iceberg_pos_delete_table(posix)
     monkeypatch.setattr(IB, "DISTRIBUTED_MANIFESTS_AT", 2)
     got = IB.read_iceberg(spark, fake)
     assert sorted(r["doc_id"] for r in got.collect()) == [
@@ -231,6 +237,18 @@ def test_iceberg_injected_failure_propagates(spark, fake_store):
     store, posix, fake = fake_store
     _build_nonmonotonic_table(posix)
     store.fail_substr = ".avro"
+    with pytest.raises(FIO.FakeObjectStoreError):
+        IB.read_iceberg(spark, fake).collect()
+    store.fail_substr = None
+
+
+def test_iceberg_field_id_sniff_failure_propagates(spark, fake_store):
+    """A failed data-file footer sniff must raise: answering "no field
+    ids" falls back to name matching, which reads a renamed column as
+    nulls."""
+    store, posix, fake = fake_store
+    _build_nonmonotonic_table(posix)
+    store.fail_substr = ".parquet"
     with pytest.raises(FIO.FakeObjectStoreError):
         IB.read_iceberg(spark, fake).collect()
     store.fail_substr = None
@@ -408,8 +426,8 @@ def test_iceberg_reads_via_hadoop_fileio(spark, hadoop_io, tmp_path):
 def test_dv_antijoin_with_space_in_table_ROOT(spark, tmp_path):
     """The decode-then-slice fix: a root whose PARENT path contains an
     encodable char mis-aligned the old encoded-slice arithmetic and
-    silently resurrected deleted rows — at both the delta and txn
-    layers."""
+    silently resurrected deleted rows — at the delta, txn and Iceberg
+    layers, which share one row identity (txnlog._row_identity)."""
     base = tmp_path / "dir with space"
     base.mkdir()
     root = str(base / "t")
@@ -429,6 +447,10 @@ def test_dv_antijoin_with_space_in_table_ROOT(spark, tmp_path):
     )
     TL.txn_delete(spark, troot, F.col("doc_id") < 3)
     assert _ids(TL.txn_read(spark, troot)) == list(range(3, 10))
+    # Iceberg: position deletes against the full decoded file URI
+    iroot = str(base / "ice")
+    _build_iceberg_pos_delete_table(iroot)
+    assert _ids(IB.read_iceberg(spark, iroot)) == [1, 3, 4, 5, 6, 7, 8, 9]
 
 
 def test_starting_timestamp_resolves_through_shipped_fileio(fake_store):

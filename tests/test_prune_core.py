@@ -4,13 +4,15 @@ each log records it — txn footer stats (plus hive directories for
 partition columns), Delta ``add.stats`` / ``partitionValues``, and
 Iceberg manifest lower/upper bounds — and a random ``where``.
 
-Floats are drawn without NaN: pyarrow leaves NaN out of a column's
-min/max, and Spark orders NaN above every number, so neither this
-evaluator nor Parquet's own row-group filter can see a NaN row."""
+Floats are drawn WITH NaN, in rows and in bounds: pyarrow and Iceberg
+bounds leave NaN out of a column's min/max, and Spark orders NaN above
+every number (NaN equals NaN), which ``_matches`` follows. So a float
+max below ``lo`` proves a miss only together with a numeric ``hi``."""
 
 import datetime as dt
 import functools
 import json
+import math
 import os
 import tempfile
 
@@ -36,8 +38,8 @@ _TZS = [UTC, dt.timezone(dt.timedelta(hours=5)),
 TYPES = {
     "int": (hst.integers(-3, 3), pa.int64(), "long", "long"),
     "float": (
-        hst.integers(-6, 6).map(lambda i: i / 2), pa.float64(),
-        "double", "double",
+        hst.integers(-6, 6).map(lambda i: i / 2) | hst.just(math.nan),
+        pa.float64(), "double", "double",
     ),
     "str": (hst.text("abc", min_size=1, max_size=2), pa.string(),
             "string", "string"),
@@ -91,14 +93,25 @@ def cases(draw):
     return name, part, files, bound, draw(hst.booleans())
 
 
+def _nan(v) -> bool:
+    return isinstance(v, float) and math.isnan(v)
+
+
+def _key(v):
+    """Spark's order: NaN equals NaN and sorts above every number."""
+    return (1, 0.0) if _nan(v) else (0, v)
+
+
 def _matches(v, b) -> bool:
     """Spark's semantics for one row: NULL never matches."""
     if v is None:
         return False
     if isinstance(b, TL._In):
-        return any(v == x for x in b)
+        return any(_key(v) == _key(x) for x in b)
     lo, hi = b
-    return (lo is None or v >= lo) and (hi is None or v <= hi)
+    return (lo is None or _key(v) >= _key(lo)) and (
+        hi is None or _key(v) <= _key(hi)
+    )
 
 
 def _hive(v) -> str:
@@ -218,11 +231,16 @@ def _exact_misses(log: str, name: str, part: bool, ms: bool, rows, b):
         return all(x not in vals for x in eqs)
     if not vals:
         return True  # all NULL: no comparison matches
+    if any(_nan(v) for v in [*vals, *b]):
+        return False  # footers and bounds leave NaN out
     mn, mx = min(vals), max(vals)
     if isinstance(b, TL._In):
         return all(x < mn or x > mx for x in b)
     lo, hi = b
-    return (lo is not None and mx < lo) or (hi is not None and mn > hi)
+    # a float max proves a miss only when ``hi`` rules NaN rows out
+    return (
+        lo is not None and mx < lo and (hi is not None or name != "float")
+    ) or (hi is not None and mn > hi)
 
 
 _MS_MAX = dt.datetime(2024, 1, 1, 12, 0, 0, 1500)
@@ -234,6 +252,8 @@ _MS_MAX = dt.datetime(2024, 1, 1, 12, 0, 0, 1500)
 @example(("ts", False, [[_MS_MAX]], (_MS_MAX, None), True))
 @example(("tstz", False, [[_MS_MAX.replace(tzinfo=UTC)]],
           _MS_MAX.replace(tzinfo=UTC), True))
+# pyarrow records max=5.0 for this file; its NaN row matches c >= 10
+@example(("float", False, [[1.0, math.nan, 5.0]], (10.0, None), False))
 def test_shared_core_prunes_exactly_what_stats_rule_out(case):
     """(a) no file holding a matching row is ever pruned, in any log;
     (b) a file whose exact min/max (or partition value) misses the
@@ -250,3 +270,18 @@ def test_shared_core_prunes_exactly_what_stats_rule_out(case):
             assert not (
                 k and _exact_misses(log, name, part, ms, rows, wn["c"])
             ), (log, i, "kept a file its exact metadata rules out")
+
+
+def test_nan_row_group_never_proves_a_miss():
+    """Two row groups as Spark's parquet-mr writer records them: the
+    second holds NaN and says ``max=NaN``. The merged stats must keep
+    the file for ``c >= 10`` (NaN matches) and for ``10 <= c <= 20``
+    (the NaN-stamped group's other values are unknown)."""
+    g1 = {"t": "num", "min": 1.0, "max": 5.0, "nulls": 0}
+    g2 = {"t": "num", "min": math.nan, "max": math.nan, "nulls": 0}
+    for groups in ([g1, g2], [g2, g1]):
+        merged = None
+        for g in groups:
+            merged = TL._merge_col_stats(merged, g)
+        for bound in ((10.0, None), (10.0, 20.0)):
+            assert TL._keep_file({"c": bound}, {"c": merged}), (groups, bound)

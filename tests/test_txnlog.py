@@ -2354,3 +2354,22 @@ def test_append_split_empty_slice_raises(spark, tmp_path):
         TL.txn_append_split(
             spark, df, str(tmp_path / "t"), F.lit(1), [1, 2]
         )
+
+
+def test_dv_free_read_plans_as_bare_parquet_relation(spark, tmp_path):
+    """The hot path: every storage read is a txn_read, and each plan
+    node above the scan costs planning time per call. Without deletion
+    vectors the read is the parquet relation alone; a vector adds the
+    row identity and the anti-join."""
+    path = str(tmp_path / "t")
+    TL.txn_append(spark, _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]), path, [])
+
+    def plan():
+        qe = TL.txn_read(spark, path)._jdf.queryExecution()
+        return qe.analyzed().toString()
+
+    bare = plan()
+    assert bare.startswith("Relation ") and "parquet" in bare, bare
+    assert "Project" not in bare and "Join" not in bare, bare
+    TL.txn_delete(spark, path, F.col("k") == 1)
+    assert "Join LeftAnti" in plan()
